@@ -21,7 +21,7 @@ object GcProbe {
     // variance is shuffle-write I/O on the container's disk rather than
     // compute (the r15 llm_pack_shards attribution).
     val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -17,7 +17,7 @@ object PackAttribution {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.isEmpty) Seq("/root/testdata/sf0.1", "scale/sf1") else args.toSeq
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -58,7 +58,7 @@ object ScaleFixture {
     // quadratic blow-up the rotation exists to prevent (ADVICE r13)
     require(k <= 100, s"factor must be <= 100 (substitution space is 10x10): $k")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list — the clustering step
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   * the minimum component label among itself and its neighbors; rounds repeat
   * until a fixpoint (no label changed), with a `maxIter` guard. Per round:
   * one join + one aggregation, both keyed on node id — no global sort, no
-  * driver-side graph. State is materialized per round (localCheckpoint) so
+  * driver-side graph. State is `cut` per round (an eager localCheckpoint) so
   * lineage stays flat across iterations.
   *
   * Scale shape: rounds needed = O(log diameter), not diameter: each round
@@ -29,15 +30,6 @@ import org.apache.spark.sql.functions._
   * diameter-many full rounds, a worse deal.
   */
 object Components {
-
-  // localCheckpoint alone cuts the lineage (eager); the r11-era extra
-  // `createDataFrame(chk.rdd, schema)` re-wrap forced every downstream read
-  // of the labels through an external-Row round-trip (RDD scan →
-  // DeserializeToObject, no whole-stage codegen) — per ROUND and per
-  // consumer. Dropped in r15 (guide §4: stay on codegen'd paths); rows are
-  // identical, the llm_components/dedup_groups/cluster_keeper hashes are
-  // pinned by the oracle gates.
-  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Component label per node: (id, comp) with comp = min node id of the
     * component. `edges` needs columns (id_a, id_b); isolated nodes can be
@@ -56,7 +48,7 @@ object Components {
     // checkpoint, O(edges) executor storage — the same class as the
     // per-round label checkpoint; sym/edgeNodes below are then map-only
     // reads of the cached partitions.
-    val edgesM = materialize(edges.select(col("id_a"), col("id_b")))
+    val edgesM = cut(edges.select(col("id_a"), col("id_b")))
     val edgeNodes = edgesM.select(col("id_a").as("id"))
       .unionByName(edgesM.select(col("id_b").as("id")))
     val allNodes = nodes.map(n => edgeNodes.unionByName(n.toDF("id")))
@@ -66,7 +58,7 @@ object Components {
       .unionByName(edgesM.select(col("id_b").as("src"), col("id_a").as("dst")))
       .filter(col("src") =!= col("dst"))
 
-    var labels = materialize(allNodes.withColumn("comp", col("id")))
+    var labels = cut(allNodes.withColumn("comp", col("id")))
     // labels only ever DECREASE, so Σcomp strictly decreases until the
     // fixpoint — convergence is one aggregate per round, no self-join
     // (decimal sum: Σ of 64-bit ids can overflow a long at scale)
@@ -87,7 +79,7 @@ object Components {
       // is in `propagated`, so the lookup always hits (coalesce is
       // defensive); labels stay monotone non-increasing, same fixpoint,
       // remaining chain depth halves per round
-      val next = materialize(
+      val next = cut(
         propagated.join(
             propagated.select(col("id").as("comp"), col("comp").as("__pc")),
             Seq("comp"), "left")

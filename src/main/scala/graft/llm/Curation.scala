@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composition a training-data pipeline
@@ -77,12 +78,6 @@ object Curation {
     urlCol.map(u => Web.withUrlColumns(withDecon, u)).getOrElse(withDecon)
   }
 
-  // plain localCheckpoint (r15): the former createDataFrame(chk.rdd, schema)
-  // re-wrap forced downstream reads through an external-Row RDD scan (no
-  // codegen); both call sites feed forward only, so the fresh-attribute-id
-  // rebase of Candles.materialize is not needed here.
-  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** Cumulative stage predicates over an [[annotate]]d frame, in pipeline
     * order — each entry includes all previous stages' conditions, so the
     * funnel counts in [[report]] read directly off them. */
@@ -118,7 +113,7 @@ object Curation {
       evalDocs: Option[DataFrame] = None,
       urlCol: Option[String] = None,
       nbModel: Option[DataFrame] = None): DataFrame = {
-    val filtered = materialize(annotate(docs, textCol, lm, evalDocs, urlCol, nbModel))
+    val filtered = cut(annotate(docs, textCol, lm, evalDocs, urlCol, nbModel))
       .filter(stageConditions(config).last._2)
     config.dedup match {
       case "none" => filtered
@@ -496,7 +491,7 @@ object Curation {
     val aggs = conds.map { case (name, c) =>
       count(when(c, lit(1))).as(s"after_$name")
     } :+ count_distinct(when(conds.last._2, md5(col(textCol)))).as("after_dedup_exact")
-    materialize(annotate(docs, textCol, lm, evalDocs, urlCol, nbModel))
+    cut(annotate(docs, textCol, lm, evalDocs, urlCol, nbModel))
       .agg(count(lit(1)).as("total"), aggs: _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -294,19 +295,6 @@ object Dedup {
     u(text)
   }
 
-  /** Eager materialization with fresh attribute ids (localCheckpoint +
-    * rebase, as Candles/ChainSync.materialize): the checkpointed blocks are
-    * GC-released once the frame is unreachable, unlike a never-unpersisted
-    * `persist()` (ADVICE r2 pattern).
-    *
-    * r15: plain localCheckpoint — the former `createDataFrame(chk.rdd,
-    * schema)` re-wrap made every downstream read of the shingled frame an
-    * external-Row RDD scan (DeserializeToObject, no whole-stage codegen),
-    * paid TWICE per verify (both pair-join sides). The rebase-for-fresh-
-    * attribute-ids reason in `Candles.materialize` does not apply here:
-    * consumers only self-join through renamed projections. */
-  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** n-gram Jaccard similarity verification of candidate pairs: join texts
     * back, compute |A∩B| / |A∪B| over hashed word shingles with builtin
     * array ops (values equal string-shingle Jaccard, see [[shingleHashes]]). */
@@ -324,7 +312,7 @@ object Dedup {
     // (measured 2× the verify stage at sf0.1).
     val ids = candidates.select(col("id_a").as(idCol))
       .union(candidates.select(col("id_b").as(idCol))).distinct()
-    val sh = materialize(docs.join(ids, Seq(idCol), "left_semi")
+    val sh = cut(docs.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol), shingleHashes(col(textCol), k).as("sh")))
     val withA = candidates.join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
     val withB = withA.join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -413,7 +401,7 @@ object Dedup {
       threshold: Double = 0.9): DataFrame = {
     val ids = candidates.select(col("id_a").as(idCol))
       .union(candidates.select(col("id_b").as(idCol))).distinct()
-    val sh = materialize(docs.join(ids, Seq(idCol), "left_semi")
+    val sh = cut(docs.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol), shingleHashes(col(textCol), k).as("sh")))
     val withA = candidates.join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
     val withB = withA.join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -437,7 +425,7 @@ object Dedup {
     // The candidate frame feeds three consumers (two semi-join sides and the
     // verify join) — materialize so the signature scan runs once, not per
     // branch (and is GC-released, unlike a leaked persist).
-    val cands = materialize(minhashLshCandidates(docs, idCol, textCol))
+    val cands = cut(minhashLshCandidates(docs, idCol, textCol))
     val dups = jaccardVerify(cands, docs, idCol, textCol, threshold = threshold)
       .select(col("id_b").as(idCol)).distinct()
     docs.join(dups, Seq(idCol), "left_anti")
@@ -455,7 +443,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       threshold: Double = 0.7): DataFrame = {
-    val cands = materialize(minhashLshCandidates(docs, idCol, textCol))
+    val cands = cut(minhashLshCandidates(docs, idCol, textCol))
     val pairs = jaccardVerify(cands, docs, idCol, textCol, threshold = threshold)
     val survivors = Components.dupClusters(pairs.select("id_a", "id_b"), docs.select(col(idCol)))
       .filter(col("comp") === col("id"))
@@ -582,7 +570,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       threshold: Double = 0.7): DataFrame = {
-    val cands = materialize(incrementalCandidates(newDocs, index, idCol, textCol))
+    val cands = cut(incrementalCandidates(newDocs, index, idCol, textCol))
     val dups = verifyPairsAcross(cands, newDocs, corpusDocs,
       idCol = idCol, textCol = textCol, threshold = threshold)
       .select(col("new_id").as(idCol)).distinct()

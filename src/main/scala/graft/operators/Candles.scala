@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -238,27 +239,34 @@ object Candles {
     * leaves two union branches that each re-execute the 8 chained
     * partition-local aggregations up to 1d — exchange reuse dedups the
     * SHUFFLES across branches, not the in-stage agg chains (measured as
-    * a2b's floor, NOTES r06). The 1d frame is localCheckpoint'ed — which
-    * preserves its (asset-pair, matcher) outputPartitioning, so both
-    * calendar aggregations stay partition-local — and both edges read the
-    * materialized table. Values are bit-identical to the filter form (the
-    * checkpoint only cuts lineage). */
+    * a2b's floor, NOTES r06). The 1d frame is [[cut]] and both edges read
+    * the materialized table; an adaptive plan reports no partitioning to
+    * the checkpoint, so each calendar edge shuffles the small 1d table
+    * once (a2b pins the count). Values are bit-identical to the filter
+    * form (the cut only ends the lineage). */
   def calendarIntervals(trades: DataFrame, decimals: Option[DataFrame] = None): DataFrame = {
     val byInterval = scala.collection.mutable.Map(
       "1m" -> partitionForLadder(minuteCandles(trades, decimals)))
     CandleIntervals.ladder.takeWhile(_._2 != "1w").foreach { case (src, dst) =>
       byInterval(dst) = ladderStep(byInterval(src), src, dst)
     }
-    // plain localCheckpoint, NOT materialize(): the RDD-rebase there exists
-    // to refresh attribute ids when mixing lineages, but it discards the
-    // outputPartitioning that keeps the calendar aggs exchange-free
-    val d1 = byInterval("1d").localCheckpoint(true)
+    val d1 = cut(byInterval("1d"))
     ladderStep(d1, "1d", "1w").unionByName(ladderStep(d1, "1d", "1M"))
   }
 
   /** Incremental maintenance (A3) ≙ `calculate_candles_since_block_uid`
     * `pg.rs:660-678` + interval-start snapping `pg.rs:776-803`: recompute
-    * candles from the first affected minute and MERGE into prior state. */
+    * candles from the first affected minute and MERGE into prior state.
+    *
+    * Only the rows since each interval's snapped cutoff are recomputed:
+    * the minute step reads every trade since the cutoff, and [[rollback]]
+    * deletes each interval from its snapped start first, so an interval's
+    * recomputed rows cover every one of its groups from that start on. A
+    * `dst` edge therefore aggregates the source interval's untouched rows
+    * in `[snap(dst), snap(src))` plus the source's recomputed rows. Each
+    * recomputed frame is [[cut]] (it is small: rows since the cutoff only,
+    * and a lazy 12-edge chain re-plans every level below it), and one
+    * upsert merges all 13 into the state, left lazy for the caller's cut. */
   def recomputeSince(
       existing: DataFrame,
       trades: DataFrame,
@@ -266,26 +274,15 @@ object Candles {
       decimals: Option[DataFrame] = None): DataFrame = {
     val minuteCutoff = truncateToMinute(firstAffectedTs)
     val keys = Seq("interval", "time_start", "amount_asset_id", "price_asset_id", "matcher_address")
-    // Each edge reads AND rewrites the state, so a lazy chain would reference
-    // state twice per level — exponential lineage across 12 edges. Cut it by
-    // materializing per edge, exactly as a production MERGE-into-table does
-    // (the candle state is a small aggregate at any input scale).
-    var state = materialize(Merge.upsert(existing, minuteCandles(trades, decimals, Some(minuteCutoff)), keys))
+    val recomputed = scala.collection.mutable.Map(
+      "1m" -> cut(minuteCandles(trades, decimals, Some(minuteCutoff))))
     CandleIntervals.ladder.foreach { case (src, dst) =>
-      val snapped = intervalStart(minuteCutoff, dst)
-      state = materialize(Merge.upsert(state, ladderStep(state, src, dst, Some(snapped)), keys))
+      val untouched = existing.filter(col("interval") === src &&
+        col("time_start") >= lit(intervalStart(minuteCutoff, dst)) &&
+        col("time_start") < lit(intervalStart(minuteCutoff, src)))
+      recomputed(dst) = cut(ladderStep(untouched.unionByName(recomputed(src)), src, dst))
     }
-    state
-  }
-
-  /** Eagerly materialize and REBASE onto fresh attributes. A bare
-    * `localCheckpoint` keeps the source plan's attribute ids; mixing the
-    * checkpointed frame with plans re-derived from the same lineage (tests,
-    * incremental-vs-full comparisons) then mis-binds columns by id. Rebuilding
-    * from the checkpointed RDD gives the state a brand-new attribute set. */
-  private def materialize(df: DataFrame): DataFrame = {
-    val chk = df.localCheckpoint(true)
-    chk.sparkSession.createDataFrame(chk.rdd, chk.schema)
+    Merge.upsert(existing, CandleIntervals.all.map(recomputed).reduce(_.unionByName(_)), keys)
   }
 
   /** Candle rollback ≙ `pg.rs:817-838` + the post-rollback recompute

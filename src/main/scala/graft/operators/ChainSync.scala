@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.functions._
 
 import graft.convert.{Extract, RawBlock, RawRollback, RawUpdate, TxConvert}
@@ -16,9 +17,10 @@ import graft.schema.ReferenceSchemas
   * State is a set of DataFrames (the engine's tables); every step is a pure
   * transform so `handleUpdates` is usable identically from a batch driver, a
   * test replay, or [[graft.streaming.MicroBatchPipeline]]'s foreachBatch.
-  * State frames are re-materialized once per fold step (localCheckpoint) so
-  * lineage does not grow unboundedly across micro-batches — the same role
-  * the reference's per-batch Postgres COMMIT plays (`mod.rs:168-186`).
+  * Every state frame is [[org.apache.spark.sql.GraftColumnBridge.cut]] once
+  * per micro-batch so lineage does not grow unboundedly across batches —
+  * the same role the reference's per-batch Postgres COMMIT plays
+  * (`mod.rs:168-186`).
   */
 object ChainSync {
 
@@ -89,7 +91,14 @@ object ChainSync {
       case (s, Right(r)) => rollbackTo(s, r.toBlockId)
     }
     // one lineage cut per micro-batch ≙ the reference's per-batch COMMIT
-    materialize(folded)
+    folded.copy(
+      blocks = cut(folded.blocks),
+      facts = folded.facts.map { case (k, v) => k -> cut(v) },
+      assetUpdates = cut(folded.assetUpdates),
+      assetTickers = cut(folded.assetTickers),
+      assetOrigins = cut(folded.assetOrigins),
+      wavesData = cut(folded.wavesData),
+      candles = cut(folded.candles))
   }
 
   /** Microblock squash ≙ `squash_microblocks` (`mod.rs:769-792`): facts that
@@ -808,21 +817,4 @@ object ChainSync {
     Views.decimals(spark, state.assetUpdates),
     Views.tickers(state.assetTickers),
     Views.assets(spark, state.assetUpdates, state.assetTickers, state.assetOrigins, state.wavesData))
-
-  /** Cut lineage once per fold step (≙ the reference's per-batch COMMIT):
-    * localCheckpoint + rebase, as `Candles.materialize` (NOTES.md). */
-  private def materialize(state: ChainState): ChainState = {
-    def m(df: DataFrame): DataFrame = {
-      val chk = df.localCheckpoint(true)
-      chk.sparkSession.createDataFrame(chk.rdd, chk.schema)
-    }
-    state.copy(
-      blocks = m(state.blocks),
-      facts = state.facts.map { case (k, v) => k -> m(v) },
-      assetUpdates = m(state.assetUpdates),
-      assetTickers = m(state.assetTickers),
-      assetOrigins = m(state.assetOrigins),
-      wavesData = m(state.wavesData),
-      candles = m(state.candles))
-  }
 }

@@ -93,7 +93,7 @@ object Pipeline {
     * per partition. Returns the frame with a 1-based `__global_rn` column. */
   def globalRowNumber(events: DataFrame, orderCol: Column, partitions: Int = 0): DataFrame = {
     val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Range partitions come out in key order, so partition id IS the range
     // rank; within a sorted partition monotonically_increasing_id ascends in
     // row order. Global rn = cumulative prior-partition counts + local rank.
@@ -152,7 +152,7 @@ object Pipeline {
       partitions: Int = 0): DataFrame = {
     require(groupCols.nonEmpty, "use globalRowNumber for the ungrouped form")
     val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val keys = groupCols.map(col) :+ orderCol
     val sorted = events.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
       .withColumn("__pid", spark_partition_id())
@@ -199,7 +199,7 @@ object Pipeline {
   def runningTotal(events: DataFrame, orderCols: Seq[Column], valueCol: Column,
       partitions: Int = 0): DataFrame = {
     val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val sorted = events.repartitionByRange(n, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
       .withColumn("__pid", spark_partition_id())

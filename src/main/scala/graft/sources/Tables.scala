@@ -61,7 +61,7 @@ object Tables {
     * sorts) — which every oracle-gated query is, by the cross-engine
     * hashing discipline. */
   def parallelizeKernelInput(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (scanParallelism(df) * 2 >= target) df else df.repartition(target)
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -68,7 +69,7 @@ object StreamingDedup {
     // Durability (ADVICE r5): with a checkpoint dir configured
     // (`sparkContext.setCheckpointDir`), the materialization is a RELIABLE
     // checkpoint — executor loss re-reads the blocks from the checkpoint
-    // store and the stream keeps running. Without one, localCheckpoint
+    // store and the stream keeps running. Without one, `cut`'s localCheckpoint
     // stores blocks only on executors: losing an executor makes the static
     // side unrecoverable and every subsequent micro-batch fails — the
     // recovery path is a stream restart (which rebuilds the static side
@@ -76,10 +77,8 @@ object StreamingDedup {
     // checkpoint dir; the bounded replay harnesses don't need one.
     val seenHashes = {
       val hashed = seen.select(md5(col(textCol)).as("__h")).distinct()
-      val chk =
-        if (spark.sparkContext.getCheckpointDir.isDefined) hashed.checkpoint(true)
-        else hashed.localCheckpoint(true)
-      spark.createDataFrame(chk.rdd, chk.schema)
+      if (spark.sparkContext.getCheckpointDir.isDefined) hashed.checkpoint(true)
+      else cut(hashed)
     }
     val bf = seenHashes.stat.bloomFilter("__h", expectedItems, fpp)
     val bfB = spark.sparkContext.broadcast(bf)

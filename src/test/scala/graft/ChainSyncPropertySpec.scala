@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.convert._
-import graft.operators.ChainSync
+import graft.operators.{Candles, ChainSync}
 
 /** Randomized model-based check of the production orchestrator: any history
   * of key blocks / microblocks / rollbacks, split across arbitrary
@@ -107,6 +107,9 @@ class ChainSyncPropertySpec extends SparkSpec {
       }
       val clean = ChainSync.handleUpdates(spark, ChainSync.emptyState(spark), mergedChain)
       same(folded.candles, clean.candles, s"candles (seed $seed)")
+      // both sides above fold through recomputeSince; the one-shot ladder
+      // over the surviving trades does not
+      same(folded.candles, Candles.allIntervals(clean.facts("txs_7")), s"candles vs one-shot (seed $seed)")
       same(folded.facts("txs_7").drop("block_uid"),
         clean.facts("txs_7").drop("block_uid"), s"txs_7 (seed $seed)")
       same(folded.assetUpdates.drop("block_uid"),

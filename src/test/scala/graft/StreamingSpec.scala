@@ -292,10 +292,7 @@ class StreamingSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         body
-        // give the listener bus time to drain before counting
-        var waited = 0
-        while (jobs.get() < 1 && waited < 20) { Thread.sleep(50); waited += 1 }
-        Thread.sleep(250)
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
         jobs.get()
       } finally spark.sparkContext.removeSparkListener(listener)
     }
