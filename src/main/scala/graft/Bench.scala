@@ -71,7 +71,7 @@ object Bench {
     * JIT elision nor allocation/GC state can skew it; one warm-up pass so
     * the measured loop is compiled code. */
   private[graft] def cpuProbe(
-      threads: Int = 32,
+      threads: Int,
       Iters: Long = 1000000000L): (Double, Double) = {
     def burn(iters: Long, seed: Long): Long = {
       var x = seed | 1L
@@ -95,6 +95,21 @@ object Bench {
     pool.shutdown()
     if (sink == 0) System.err.println("cpuProbe sink") // keep `sink` live
     (oneT, nT)
+  }
+
+  /** The cpu count of the record window (the 8-cpu window is a second,
+    * separate run). */
+  private[graft] val RecordCpus = 32
+
+  /** bench_out.json is the artifact of record AT THE RECORD'S SCALE (sf0.1,
+    * [[RecordCpus]]) — only clean FULL runs at that scale replace it. A
+    * clean full run at another sf (an sf0.001 smoke) or another cpu count
+    * (the 8-cpu window) writes its own `bench_out[_<sf>][_c<cpus>].json`
+    * instead of clobbering the record. */
+  private[graft] def outFileName(sfDir: String, cpus: Int): String = {
+    val base = java.nio.file.Paths.get(sfDir).getFileName.toString
+    "bench_out" + (if (base == "sf0.1") "" else s"_$base") +
+      (if (cpus == RecordCpus) "" else s"_c$cpus") + ".json"
   }
 
   def main(args: Array[String]): Unit = {
@@ -243,13 +258,8 @@ object Bench {
       name -> (if (v < 0) -1.0 else median(priorRuns.flatMap(_.get(name)).filter(_ >= 0) :+ v))
     }
     val line = jsonLine(merged, contendedExtra)
-    // bench_out.json is the artifact of record AT THE DRIVER'S SCALE
-    // (sf0.1) — only clean FULL runs at that scale replace it; a clean
-    // full run at another sf (an sf0.001 smoke) writes its own
-    // bench_out_<sf>.json instead of clobbering the record
     if (only.isEmpty && failedNames.isEmpty) {
-      val base = Paths.get(sfDir).getFileName.toString
-      val outName = if (base == "sf0.1") "bench_out.json" else s"bench_out_$base.json"
+      val outName = outFileName(sfDir, cpus.toInt)
       try Files.write(Paths.get(outName), (line + "\n").getBytes("UTF-8"))
       catch { case e: java.io.IOException => System.err.println(s"$outName write failed: $e") }
     }

@@ -20,9 +20,10 @@ object GcProbe {
     // off /tmp — e.g. onto /dev/shm — to A/B-test whether a gate's wall
     // variance is shuffle-write I/O on the container's disk rather than
     // compute (the r15 llm_pack_shards attribution).
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(d => builder.config("spark.local.dir", d))

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
 object PackAttribution {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.isEmpty) Seq("/root/testdata/sf0.1", "scale/sf1") else args.toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

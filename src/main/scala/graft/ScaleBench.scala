@@ -100,9 +100,10 @@ object ScaleBench {
     val big = args.lift(1).getOrElse("scale/sf1")
     val huge = args.lift(2) // 100x dir (VERDICT r13 #1); optional
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -325,7 +326,7 @@ object ScaleBench {
       // divide big/small times measured minutes apart in ONE window, so
       // they are drift-immune, but comparing windows ACROSS rounds is not —
       // the probe makes that comparison normalizable
-      { val (p1, pn) = Bench.cpuProbe()
+      { val (p1, pn) = Bench.cpuProbe(cpus.toInt)
         s""""cpu_probe_1t":${fmt(p1)},"cpu_probe_nt":${fmt(pn)},""" } +
       s""""rows":[${(rows ++ hugeRows ++ Seq(streamRow, streamJoinRow)).mkString(",")}]}\n"""
     java.nio.file.Files.write(java.nio.file.Paths.get("scale_history.jsonl"),

@@ -57,9 +57,10 @@ object ScaleFixture {
     // i-100's text EXACTLY and re-introduce the cross-replica near-dup
     // quadratic blow-up the rotation exists to prevent (ADVICE r13)
     require(k <= 100, s"factor must be <= 100 (substitution space is 10x10): $k")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

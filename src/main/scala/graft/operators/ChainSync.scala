@@ -3,7 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge.cut
+import org.apache.spark.sql.GraftColumnBridge.{concurrently, cut}
 import org.apache.spark.sql.functions._
 
 import graft.convert.{Extract, RawBlock, RawRollback, RawUpdate, TxConvert}
@@ -70,7 +70,9 @@ object ChainSync {
 
   /** ≙ the two folds of `handle_updates` (`mod.rs:197-251`): group
     * consecutive key blocks into one run (microblocks and rollbacks close
-    * runs), then apply each run. */
+    * runs), then apply each run, then cut every state frame's lineage. The
+    * ~30 per-table cuts are independent Spark jobs and run concurrently
+    * ([[org.apache.spark.sql.GraftColumnBridge.concurrently]]). */
   def handleUpdates(spark: SparkSession, state: ChainState, updates: Seq[RawUpdate],
       config: Config = Config()): ChainState = {
     val runs = updates.foldLeft(Vector.empty[Either[Seq[RawBlock], RawRollback]]) {
@@ -91,14 +93,13 @@ object ChainSync {
       case (s, Right(r)) => rollbackTo(s, r.toBlockId)
     }
     // one lineage cut per micro-batch ≙ the reference's per-batch COMMIT
-    folded.copy(
-      blocks = cut(folded.blocks),
-      facts = folded.facts.map { case (k, v) => k -> cut(v) },
-      assetUpdates = cut(folded.assetUpdates),
-      assetTickers = cut(folded.assetTickers),
-      assetOrigins = cut(folded.assetOrigins),
-      wavesData = cut(folded.wavesData),
-      candles = cut(folded.candles))
+    val factNames = folded.facts.keys.toSeq
+    val frames = Seq(folded.blocks, folded.assetUpdates, folded.assetTickers, folded.assetOrigins,
+      folded.wavesData, folded.candles) ++ factNames.map(folded.facts)
+    val Seq(blocks, assetUpdates, assetTickers, assetOrigins, wavesData, candles, facts @ _*) =
+      concurrently(spark, frames.map(df => () => cut(df)))
+    folded.copy(blocks = blocks, facts = factNames.zip(facts).toMap, assetUpdates = assetUpdates,
+      assetTickers = assetTickers, assetOrigins = assetOrigins, wavesData = wavesData, candles = candles)
   }
 
   /** Microblock squash ≙ `squash_microblocks` (`mod.rs:769-792`): facts that
@@ -356,9 +357,16 @@ object ChainSync {
     * Single-writer is still assumed (two concurrent persists would race on
     * the same v<N>).
     *
+    * The table writes are independent, so they run as one
+    * [[org.apache.spark.sql.GraftColumnBridge.concurrently]] fan-out of
+    * Spark jobs; the manifest keeps their input order. Atomicity is
+    * unchanged: `concurrently` joins every write before it returns or
+    * throws, and only then are the manifest written and `_CURRENT` swapped.
+    *
     * `onTableWritten` is a progress hook (called with each table name after
     * its write completes) — also how the crash-injection test severs a
-    * persist mid-way. */
+    * persist mid-way. It runs on pool threads, possibly several at once and
+    * in any table order. */
   /** Per-bucket (count, Σ hash) fingerprint frame — `(b INT, n BIGINT,
     * h DECIMAL(38,0))`. NEVER collected whole (VERDICT r13 #3 retired the
     * r12 driver-side compare and its 2^21-row tourniquet): the frame is
@@ -451,7 +459,9 @@ object ChainSync {
     // height-keyed fact table plans against the SAME blocks fingerprint
     // frame with (almost always) the same freeze range — without the cache
     // each of the ~25 tables would re-run the range collect as its own
-    // Spark job per persist
+    // Spark job per persist. The tables plan concurrently, so a lookup holds
+    // the cache's lock through its collect: the first table runs the job,
+    // the others wait for its answer instead of each running their own
     val freezeCache = scala.collection.mutable.Map.empty[(AnyRef, Long, Int), Set[Int]]
 
     // Shared segment planner for ANY suffix-mutating keyspace (facts by
@@ -480,9 +490,9 @@ object ChainSync {
       // being re-segmented, whose WRITES dwarf the id collect)
       val freeze: Set[Int] =
         if (tipX < 0) Set.empty
-        else freezeCache.getOrElseUpdate((bucketsX, freezeLo, tipX),
+        else freezeCache.synchronized(freezeCache.getOrElseUpdate((bucketsX, freezeLo, tipX),
           bucketsX.filter(col("b") >= freezeLo && col("b") < tipX)
-            .select("b").collect().map(_.getInt(0)).toSet)
+            .select("b").collect().map(_.getInt(0)).toSet))
       if (freeze.nonEmpty) {
         val lo = freeze.min
         (lo / FrozenSegmentSpan to (tipX - 1) / FrozenSegmentSpan).foreach { w =>
@@ -515,15 +525,12 @@ object ChainSync {
     // per-height index instead of re-issuing colliding tx uids) and the last
     // applied streaming batch id (so a checkpoint-replayed batch is
     // recognized and skipped — ADVICE r3)
-    Seq((state.uidLastHeight, state.uidNextIdx, lastBatchId))
-      .toDF("uid_last_height", "uid_next_idx", "last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/sync_meta")
-    onTableWritten("sync_meta")
-    val segs = Seq.newBuilder[SegmentRef]
-    segs ++= writeSegments("blocks_microblocks", state.blocks, "uid")
-    state.facts.toSeq.sortBy(_._1).foreach { case (name, df) =>
-      val sortCol = if (df.columns.contains("uid")) "uid" else "tx_uid" // children key on tx_uid
-      segs ++= writeSegments(name, df, sortCol)
+    def writeSyncMeta(): Seq[SegmentRef] = {
+      Seq((state.uidLastHeight, state.uidNextIdx, lastBatchId))
+        .toDF("uid_last_height", "uid_next_idx", "last_batch_id")
+        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/sync_meta")
+      onTableWritten("sync_meta")
+      Nil
     }
     // Candles: the same incremental machinery keyed by time_start WEEK.
     // The fold mutates candles only from a recent cut-off (recomputeSince/
@@ -532,44 +539,64 @@ object ChainSync {
     // an older week (a deep rollback's recompute) and invalidate from
     // there. Without this the candle history — O(pairs × minutes), which
     // grows without bound — would be rewritten whole every persist.
-    val cBucketCol = floor(unix_millis(col("time_start")) / lit(CandleBucketMs)).cast("int")
-    val cfpDf = fingerprintDf(state.candles, cBucketCol,
-      ReferenceSchemas.candles.fieldNames.map(col).toIndexedSeq)
-    val cTip = maxBucket(cfpDf)
-    val cDirty: Long = prevManifest match {
-      case None => Long.MinValue
-      case Some(m) =>
-        dirtyBoundary(cfpDf, prevFingerprintDf(spark, dir, prevVersion.get, m, "candles"))
+    def writeCandles(): Seq[SegmentRef] = {
+      val cBucketCol = floor(unix_millis(col("time_start")) / lit(CandleBucketMs)).cast("int")
+      val cfpDf = fingerprintDf(state.candles, cBucketCol,
+        ReferenceSchemas.candles.fieldNames.map(col).toIndexedSeq)
+      val cTip = maxBucket(cfpDf)
+      val cDirty: Long = prevManifest match {
+        case None => Long.MinValue
+        case Some(m) =>
+          dirtyBoundary(cfpDf, prevFingerprintDf(spark, dir, prevVersion.get, m, "candles"))
+      }
+      val cBoundary = math.min(cDirty, cTip.toLong)
+      val cKept = prevManifest.map(_.segments.filter(s =>
+        s.table == "candles" && s.frozen && s.hi < cBoundary)).getOrElse(Nil)
+      // the fingerprint frames persist as parquet INSIDE the version payload
+      // (written before the manifest, so a published manifest always has its
+      // parquet) — the next persist diffs against them distributedly instead
+      // of re-reading O(history) fp/cfp manifest text lines into the driver
+      fpDf.withColumn("kind", lit("blocks"))
+        .unionByName(cfpDf.withColumn("kind", lit("candles")))
+        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/fingerprints")
+      planSegments("candles", state.candles, cfpDf, cTip, cKept, cBucketCol,
+        Seq(col("time_start"), col("interval"), col("amount_asset_id"),
+          col("price_asset_id"), col("matcher_address")))
     }
-    val cBoundary = math.min(cDirty, cTip.toLong)
-    val cKept = prevManifest.map(_.segments.filter(s =>
-      s.table == "candles" && s.frozen && s.hi < cBoundary)).getOrElse(Nil)
-    segs ++= planSegments("candles", state.candles, cfpDf, cTip, cKept, cBucketCol,
-      Seq(col("time_start"), col("interval"), col("amount_asset_id"),
-        col("price_asset_id"), col("matcher_address")))
-    state.assetUpdates.sort("asset_id", "uid").write.mode("overwrite").parquet(s"$vdir/asset_updates")
-    state.assetTickers.sort("asset_id", "uid").write.mode("overwrite").parquet(s"$vdir/asset_tickers")
-    state.assetOrigins.sort("asset_id").write.mode("overwrite").parquet(s"$vdir/asset_origins")
+    def writeDimension(name: String, sorted: DataFrame): Seq[SegmentRef] = {
+      sorted.write.mode("overwrite").parquet(s"$vdir/$name")
+      Nil
+    }
     // waves_data: append-only by CONSTRUCTION (insert-ignore keyed by
     // height; rollback never deletes it — first-writer wins on re-append),
     // so every previously frozen segment is reusable unconditionally and
     // no fingerprints are needed; only the tip bucket is rewritten.
-    val wBucketCol = (col("height") / TableStore.HeightBucketSize).cast("int")
-    val wBucketsDf = state.wavesData
-      .groupBy(wBucketCol.as("b")).agg(count(lit(1)).as("n")).localCheckpoint()
-    val wTip = maxBucket(wBucketsDf)
-    val wKept = prevManifest.map(_.segments.filter(s =>
-      s.table == "waves_data" && s.frozen)).getOrElse(Nil)
-    segs ++= planSegments("waves_data", state.wavesData, wBucketsDf, wTip, wKept,
-      wBucketCol, Seq(col("height")))
-    // the fingerprint frames persist as parquet INSIDE the version payload
-    // (written before the manifest, so a published manifest always has its
-    // parquet) — the next persist diffs against them distributedly instead
-    // of re-reading O(history) fp/cfp manifest text lines into the driver
-    fpDf.withColumn("kind", lit("blocks"))
-      .unionByName(cfpDf.withColumn("kind", lit("candles")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/fingerprints")
-    writeManifest(spark, vdir, segs.result())
+    def writeWavesData(): Seq[SegmentRef] = {
+      val wBucketCol = (col("height") / TableStore.HeightBucketSize).cast("int")
+      val wBucketsDf = state.wavesData
+        .groupBy(wBucketCol.as("b")).agg(count(lit(1)).as("n")).localCheckpoint()
+      val wTip = maxBucket(wBucketsDf)
+      val wKept = prevManifest.map(_.segments.filter(s =>
+        s.table == "waves_data" && s.frozen)).getOrElse(Nil)
+      planSegments("waves_data", state.wavesData, wBucketsDf, wTip, wKept,
+        wBucketCol, Seq(col("height")))
+    }
+    // every table's write is independent of the others': they run as one
+    // concurrent fan-out, and their segment lists come back in this order,
+    // which is the manifest's
+    val facts = state.facts.toSeq.sortBy(_._1).map { case (name, df) =>
+      val sortCol = if (df.columns.contains("uid")) "uid" else "tx_uid" // children key on tx_uid
+      () => writeSegments(name, df, sortCol)
+    }
+    val segs = concurrently(spark,
+      Seq(() => writeSyncMeta(), () => writeSegments("blocks_microblocks", state.blocks, "uid")) ++
+        facts ++
+        Seq(() => writeCandles(),
+          () => writeDimension("asset_updates", state.assetUpdates.sort("asset_id", "uid")),
+          () => writeDimension("asset_tickers", state.assetTickers.sort("asset_id", "uid")),
+          () => writeDimension("asset_origins", state.assetOrigins.sort("asset_id")),
+          () => writeWavesData())).flatten
+    writeManifest(spark, vdir, segs)
     publishVersion(spark, dir, version)
     cleanupVersions(spark, dir, current = version)
   }

@@ -68,8 +68,11 @@ object TableStore {
       loBucket: Int,
       hiBucket: Int,
       sortCols: Seq[org.apache.spark.sql.Column]): Unit = {
-    df.filter(bucketCol.between(loBucket, hiBucket))
-      .repartitionByRange(math.max(1, hiBucket - loBucket + 1), sortCols.head)
+    val rows = df.filter(bucketCol.between(loBucket, hiBucket))
+    // one bucket is one file: coalesce instead of a range shuffle, whose
+    // boundary-sampling job would be a whole extra job per table per persist
+    (if (hiBucket <= loBucket) rows.coalesce(1)
+     else rows.repartitionByRange(hiBucket - loBucket + 1, sortCols.head))
       .sortWithinPartitions(sortCols: _*)
       .write.mode("overwrite")
       .parquet(path)

@@ -68,6 +68,13 @@ class BenchSpec extends AnyFunSuite {
     assert(one < 30.0 && many < 30.0) // sanity: 2M ALU iterations are fast
   }
 
+  test("only a run at the record's sf and cpus writes bench_out.json") {
+    assert(Bench.outFileName("/x/sf0.1", Bench.RecordCpus) == "bench_out.json")
+    assert(Bench.outFileName("/x/sf0.1", 8) == "bench_out_c8.json")
+    assert(Bench.outFileName("/x/sf0.001", Bench.RecordCpus) == "bench_out_sf0.001.json")
+    assert(Bench.outFileName("/x/sf0.001", 4) == "bench_out_sf0.001_c4.json")
+  }
+
   test("parseField extracts calibration fields from a history line") {
     val line = """{"metric":"total","value":1.5,"queries":{"a":0.5},"sf":"/x/sf0.1","cpus":32,"heap_gb":48.0000,"cpu_probe_1t":1.9064,"cpu_probe_nt":2.4444}"""
     assert(Bench.parseField(line, "cpu_probe_nt").contains(2.4444))
