@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Extract the `"queries":{...}` per-query map out of one of our own
@@ -114,16 +113,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb session + parquet-reader init so it isn't billed to whichever
-    // query happens to run first; iterate in name order for stable runs
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local()
+    // absorb parquet-reader init so it isn't billed to whichever query
+    // happens to run first; iterate in name order for stable runs
     graft.sources.Tables.load(spark, sfDir, "region").count()
     // median of 3 runs per query: single-shot timings vary ±20% on this
     // container (BASELINE.md), which round 2 showed is enough to turn a
@@ -184,7 +177,7 @@ object Bench {
     // container state the window just ran under) but BEFORE the history
     // append, so every history line carries its own calibration — floors
     // read back later can be normalized for container drift.
-    val (probe1t, probeNt) = cpuProbe(cpus.toInt)
+    val (probe1t, probeNt) = cpuProbe(cpus)
     // cpus is part of the calibration record (VERDICT r15 #2): the driver
     // runs Bench at BOTH 32 and 8 cpus against the same history file, and
     // before this field existed the 8-cpu window was merged into the 32-cpu
@@ -259,7 +252,7 @@ object Bench {
     }
     val line = jsonLine(merged, contendedExtra)
     if (only.isEmpty && failedNames.isEmpty) {
-      val outName = outFileName(sfDir, cpus.toInt)
+      val outName = outFileName(sfDir, cpus)
       try Files.write(Paths.get(outName), (line + "\n").getBytes("UTF-8"))
       catch { case e: java.io.IOException => System.err.println(s"$outName write failed: $e") }
     }

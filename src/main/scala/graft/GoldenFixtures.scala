@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-time generator for golden-snapshot fixtures committed under
   * `fixtures/` (VERDICT r12 #3: convert the f12 rows-only gate to a full
   * hash gate by "hashing the equality, not the crypto").
@@ -28,12 +26,7 @@ object GoldenFixtures {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val names = dirs

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the heaviest operators at two scales and re-asserts their
   * executed-plan exchange counts are IDENTICAL at both — the empirical
   * leg of the 100×-scale argument (VERDICT r12 #1). Plan-shape pins at
@@ -100,15 +98,7 @@ object ScaleBench {
     val big = args.lift(1).getOrElse("scale/sf1")
     val huge = args.lift(2) // 100x dir (VERDICT r13 #1); optional
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect() // absorb session init
+    val spark = GraftSession.local()
 
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
@@ -326,7 +316,7 @@ object ScaleBench {
       // divide big/small times measured minutes apart in ONE window, so
       // they are drift-immune, but comparing windows ACROSS rounds is not —
       // the probe makes that comparison normalizable
-      { val (p1, pn) = Bench.cpuProbe(cpus.toInt)
+      { val (p1, pn) = Bench.cpuProbe(GraftSession.cpus)
         s""""cpu_probe_1t":${fmt(p1)},"cpu_probe_nt":${fmt(pn)},""" } +
       s""""rows":[${(rows ++ hugeRows ++ Seq(streamRow, streamJoinRow)).mkString(",")}]}\n"""
     java.nio.file.Files.write(java.nio.file.Paths.get("scale_history.jsonl"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -57,14 +57,7 @@ object ScaleFixture {
     // i-100's text EXACTLY and re-introduce the cross-replica near-dup
     // quadratic blow-up the rotation exists to prevent (ADVICE r13)
     require(k <= 100, s"factor must be <= 100 (substitution space is 10x10): $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def write(df: DataFrame, name: String, files: Int): Unit = {
       df.repartition(files).write.mode("overwrite").parquet(s"$dst/$name.parquet")

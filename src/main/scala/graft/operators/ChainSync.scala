@@ -310,6 +310,49 @@ object ChainSync {
       maxBlockUid = cut)
   }
 
+  /** Per-bucket (count, Σ hash) fingerprint frame — `(b INT, n BIGINT,
+    * h DECIMAL(38,0))`. NEVER collected whole (VERDICT r13 #3 retired the
+    * r12 driver-side compare and its 2^21-row tourniquet): the frame is
+    * localCheckpoint'd once and every consumer — tip lookup, the
+    * [[dirtyBoundary]] diff, the freeze-range probe in planSegments — is a
+    * distributed job collecting O(1) or O(write-work) rows. The frame
+    * itself persists to `v<N>/fingerprints` parquet for the NEXT persist
+    * to diff against. */
+  private def fingerprintDf(df: DataFrame,
+      bucketCol: org.apache.spark.sql.Column,
+      hashCols: Seq[org.apache.spark.sql.Column]): DataFrame =
+    df.groupBy(bucketCol.as("b"))
+      .agg(count(lit(1)).as("n"),
+        sum(xxhash64(hashCols: _*).cast("decimal(38,0)")).as("h"))
+      .localCheckpoint()
+
+  /** First bucket whose (count, Σ hash) differs between the current and
+    * previous fingerprint frames — a distributed full-outer join whose
+    * driver collect is exactly ONE row (the min differing bucket), however
+    * deep the history. Long.MaxValue ⇔ no difference. */
+  private[graft] def dirtyBoundary(cur: DataFrame, prev: DataFrame): Long = {
+    val c = cur.select(col("b"), col("n").as("cn"), col("h").as("ch"))
+    val p = prev.select(col("b"), col("n").as("pn"), col("h").as("ph"))
+    val r = c.join(p, Seq("b"), "full_outer")
+      .filter(!(col("cn") <=> col("pn")) || !(col("ch") <=> col("ph")))
+      .agg(min(col("b"))).head()
+    if (r.isNullAt(0)) Long.MaxValue else r.getInt(0).toLong
+  }
+
+  /** Max bucket id of a fingerprint/bucket frame (-1 ⇔ empty) — one-row
+    * collect. */
+  private def maxBucket(bucketsDf: DataFrame): Int = {
+    val r = bucketsDf.agg(max(col("b"))).head()
+    if (r.isNullAt(0)) -1 else r.getInt(0)
+  }
+
+  /** The previous version's fingerprints for `kind` ("blocks"/"candles"),
+    * read back from its `fingerprints` parquet. */
+  private def prevFingerprintDf(spark: SparkSession, dir: String,
+      prevVersion: Long, kind: String): DataFrame =
+    spark.read.parquet(s"$dir/v$prevVersion/fingerprints")
+      .filter(col("kind") === kind).select("b", "n", "h")
+
   /** Durable between-batches form of the fold state — INCREMENTAL
     * (VERDICT r5 #1): fact history (blocks + every tx table) is persisted
     * as immutable height-bucket SEGMENTS under `dir/segments/` that later
@@ -367,63 +410,6 @@ object ChainSync {
     * its write completes) — also how the crash-injection test severs a
     * persist mid-way. It runs on pool threads, possibly several at once and
     * in any table order. */
-  /** Per-bucket (count, Σ hash) fingerprint frame — `(b INT, n BIGINT,
-    * h DECIMAL(38,0))`. NEVER collected whole (VERDICT r13 #3 retired the
-    * r12 driver-side compare and its 2^21-row tourniquet): the frame is
-    * localCheckpoint'd once and every consumer — tip lookup, the
-    * [[dirtyBoundary]] diff, the freeze-range probe in planSegments — is a
-    * distributed job collecting O(1) or O(write-work) rows. The frame
-    * itself persists to `v<N>/fingerprints` parquet for the NEXT persist
-    * to diff against, replacing the fp/cfp manifest text lines. */
-  private def fingerprintDf(df: DataFrame,
-      bucketCol: org.apache.spark.sql.Column,
-      hashCols: Seq[org.apache.spark.sql.Column]): DataFrame =
-    df.groupBy(bucketCol.as("b"))
-      .agg(count(lit(1)).as("n"),
-        sum(xxhash64(hashCols: _*).cast("decimal(38,0)")).as("h"))
-      .localCheckpoint()
-
-  /** First bucket whose (count, Σ hash) differs between the current and
-    * previous fingerprint frames — a distributed full-outer join whose
-    * driver collect is exactly ONE row (the min differing bucket), however
-    * deep the history. Long.MaxValue ⇔ no difference. */
-  private[graft] def dirtyBoundary(cur: DataFrame, prev: DataFrame): Long = {
-    val c = cur.select(col("b"), col("n").as("cn"), col("h").as("ch"))
-    val p = prev.select(col("b"), col("n").as("pn"), col("h").as("ph"))
-    val r = c.join(p, Seq("b"), "full_outer")
-      .filter(!(col("cn") <=> col("pn")) || !(col("ch") <=> col("ph")))
-      .agg(min(col("b"))).head()
-    if (r.isNullAt(0)) Long.MaxValue else r.getInt(0).toLong
-  }
-
-  /** Max bucket id of a fingerprint/bucket frame (-1 ⇔ empty) — one-row
-    * collect. */
-  private def maxBucket(bucketsDf: DataFrame): Int = {
-    val r = bucketsDf.agg(max(col("b"))).head()
-    if (r.isNullAt(0)) -1 else r.getInt(0)
-  }
-
-  /** The previous version's fingerprints for `kind` ("blocks"/"candles")
-    * as a DataFrame: read back from its `fingerprints` parquet, or — for a
-    * manifest written before r14 — lifted from the legacy fp/cfp text
-    * lines (driver-bounded by the OLD format's own collect bound; the
-    * first post-upgrade persist migrates to parquet). The BigInt hash
-    * travels as a string and casts to decimal(38,0) so the legacy path
-    * cannot silently truncate through Scala BigDecimal's default (38,18)
-    * encoder scale. */
-  private def prevFingerprintDf(spark: SparkSession, dir: String,
-      prevVersion: Long, m: Manifest, kind: String): DataFrame =
-    if (m.fpParquet)
-      spark.read.parquet(s"$dir/v$prevVersion/fingerprints")
-        .filter(col("kind") === kind).select("b", "n", "h")
-    else {
-      import spark.implicits._
-      val legacy = if (kind == "blocks") m.fingerprints else m.candleFingerprints
-      legacy.toSeq.map { case (b, (n, h)) => (b, n, h.toBigInt.toString) }
-        .toDF("b", "n", "hs")
-        .select(col("b"), col("n"), col("hs").cast("decimal(38,0)").as("h"))
-    }
-
   def persist(state: ChainState, dir: String, lastBatchId: Long = -1L,
       onTableWritten: String => Unit = _ => ()): Unit = {
     import graft.sinks.TableStore
@@ -445,11 +431,8 @@ object ChainSync {
     // rollback is the only below-tip mutator and always deletes block rows
     // in every bucket it touches; the diff is a distributed join collecting
     // one row
-    val dirtyFrom: Long = prevManifest match {
-      case None => Long.MinValue
-      case Some(m) =>
-        dirtyBoundary(fpDf, prevFingerprintDf(spark, dir, prevVersion.get, m, "blocks"))
-    }
+    val dirtyFrom: Long = prevVersion.fold(Long.MinValue)(v =>
+      dirtyBoundary(fpDf, prevFingerprintDf(spark, dir, v, "blocks")))
     val boundary = math.min(dirtyFrom, tipBucket.toLong)
     val keptByTable: Map[String, Seq[SegmentRef]] =
       prevManifest.map(_.segments.filter(s => s.frozen && s.hi < boundary).groupBy(_.table))
@@ -544,18 +527,15 @@ object ChainSync {
       val cfpDf = fingerprintDf(state.candles, cBucketCol,
         ReferenceSchemas.candles.fieldNames.map(col).toIndexedSeq)
       val cTip = maxBucket(cfpDf)
-      val cDirty: Long = prevManifest match {
-        case None => Long.MinValue
-        case Some(m) =>
-          dirtyBoundary(cfpDf, prevFingerprintDf(spark, dir, prevVersion.get, m, "candles"))
-      }
+      val cDirty: Long = prevVersion.fold(Long.MinValue)(v =>
+        dirtyBoundary(cfpDf, prevFingerprintDf(spark, dir, v, "candles")))
       val cBoundary = math.min(cDirty, cTip.toLong)
       val cKept = prevManifest.map(_.segments.filter(s =>
         s.table == "candles" && s.frozen && s.hi < cBoundary)).getOrElse(Nil)
       // the fingerprint frames persist as parquet INSIDE the version payload
       // (written before the manifest, so a published manifest always has its
       // parquet) — the next persist diffs against them distributedly instead
-      // of re-reading O(history) fp/cfp manifest text lines into the driver
+      // of collecting O(history) fingerprints into the driver
       fpDf.withColumn("kind", lit("blocks"))
         .unionByName(cfpDf.withColumn("kind", lit("candles")))
         .coalesce(1).write.mode("overwrite").parquet(s"$vdir/fingerprints")
@@ -615,42 +595,18 @@ object ChainSync {
   /** One immutable fact segment: rows of `table` whose height bucket lies
     * in [lo, hi], written once at some version, referenced (not rewritten)
     * by later manifests while frozen. The tip segment (frozen = false) is
-    * rewritten every persist.
-    *
-    * MANIFEST FORMAT NOTE (since r14): for a frozen segment, `lo` is the
-    * max of the FIRST POPULATED bucket in the freeze range and the span
-    * window's lower edge — not necessarily the window edge itself, as in
-    * pre-r14 manifests where `lo` was clipped to max(freezeLo, w*span).
-    * When bucket gaps exist, the first window's `lo` can therefore sit
-    * above the window edge. Readers consume only `hi` (invalidation is
-    * "frozen segment whose hi reaches past the rewrite boundary dies
-    * whole"), so both encodings read identically; `lo` is advisory
-    * provenance of where the segment's data actually starts. */
+    * rewritten every persist. */
   private[graft] final case class SegmentRef(
       table: String, relPath: String, lo: Int, hi: Int, frozen: Boolean)
 
-  /** Per-version manifest: the full segment list per table, plus layout
-    * flags. `candleSegmented` distinguishes a manifest written by this
-    * layout (candles live in segments, possibly zero of them) from an
-    * older full-rewrite manifest (candles live in the version directory);
-    * `fpParquet` says the version's fingerprints live in its
-    * `fingerprints` parquet (r14 — VERDICT r13 #3) rather than as fp/cfp
-    * text lines here. The legacy fingerprint maps stay populated only when
-    * reading a pre-r14 manifest, for the one migration persist. */
-  private[graft] final case class Manifest(
-      fingerprints: Map[Int, (Long, BigDecimal)],
-      candleFingerprints: Map[Int, (Long, BigDecimal)],
-      segments: Seq[SegmentRef],
-      candleSegmented: Boolean,
-      wavesSegmented: Boolean,
-      fpParquet: Boolean)
+  /** Per-version manifest: one `seg <table> <rel> <lo> <hi> <frozen>`
+    * line per segment of the segmented tables (blocks, the tx tables,
+    * candles, waves_data). */
+  private[graft] final case class Manifest(segments: Seq[SegmentRef])
 
   private def writeManifest(spark: SparkSession, vdir: String,
       segs: Seq[SegmentRef]): Unit = {
     val sb = new StringBuilder
-    sb.append("cseg 1\n")
-    sb.append("wseg 1\n")
-    sb.append("fpq 1\n")
     segs.foreach { s =>
       sb.append(s"seg ${s.table} ${s.relPath} ${s.lo} ${s.hi} ${if (s.frozen) 1 else 0}\n")
     }
@@ -661,8 +617,8 @@ object ChainSync {
     try { out.write(sb.toString.getBytes("UTF-8")); out.hsync() } finally out.close()
   }
 
-  /** None ⇔ `vdir` has no manifest (legacy full-rewrite layouts, or a
-    * crashed persist that never got to phase 2). */
+  /** None ⇔ `vdir` has no manifest (a crashed persist that never got to
+    * phase 2). */
   private[graft] def readManifest(spark: SparkSession, vdir: String): Option[Manifest] = {
     val (fc, base) = fileContext(spark, vdir)
     try {
@@ -673,26 +629,11 @@ object ChainSync {
           org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
           new String(bos.toByteArray, "UTF-8")
         } finally in.close()
-      val fps = Map.newBuilder[Int, (Long, BigDecimal)]
-      val cfps = Map.newBuilder[Int, (Long, BigDecimal)]
-      val segs = Seq.newBuilder[SegmentRef]
-      var cseg = false
-      var wseg = false
-      var fpq = false
-      text.linesIterator.filter(_.nonEmpty).foreach { line =>
-        line.split(' ') match {
-          case Array("cseg", "1") => cseg = true
-          case Array("wseg", "1") => wseg = true
-          case Array("fpq", "1") => fpq = true
-          case Array("fp", b, n, h) => fps += b.toInt -> ((n.toLong, BigDecimal(h)))
-          case Array("cfp", b, n, h) => cfps += b.toInt -> ((n.toLong, BigDecimal(h)))
-          case Array("seg", t, p, lo, hi, fz) =>
-            segs += SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1")
-          case other => throw new IllegalStateException(
-            s"corrupt manifest line in $vdir: ${other.mkString(" ")}")
-        }
-      }
-      Some(Manifest(fps.result(), cfps.result(), segs.result(), cseg, wseg, fpq))
+      Some(Manifest(text.linesIterator.filter(_.nonEmpty).map(_.split(' ') match {
+        case Array("seg", t, p, lo, hi, fz) => SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1")
+        case other => throw new IllegalStateException(
+          s"corrupt manifest line in $vdir: ${other.mkString(" ")}")
+      }).toSeq))
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
@@ -704,8 +645,7 @@ object ChainSync {
     (fc, p)
   }
 
-  /** The published version (None = nothing published; legacy flat layouts
-    * from before versioning also read as None and fall back). */
+  /** The published version (None = nothing published). */
   private def currentVersion(spark: SparkSession, dir: String): Option[Long] = {
     val (fc, base) = fileContext(spark, dir)
     val ptr = new org.apache.hadoop.fs.Path(base, "_CURRENT")
@@ -774,37 +714,30 @@ object ChainSync {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** The directory holding the published tables: the `v<N>` the `_CURRENT`
-    * pointer names, or `dir` itself for legacy flat layouts. */
-  private def resolvedDir(spark: SparkSession, dir: String): String =
-    currentVersion(spark, dir).map(v => s"$dir/v$v").getOrElse(dir)
-
-  /** Resume a fold state persisted by [[persist]]: block/fact tables from
-    * the manifest's segment list (each segment an explicit path — no
-    * directory listing of the whole history), dims/candles from the version
-    * directory, plus the `sync_meta` uid-generator cursor, so txs appended
-    * at the resumed tip height continue the per-height index rather than
-    * re-issuing uids that collide with persisted rows (ADVICE r3). States
-    * persisted before `sync_meta`/`_MANIFEST` existed (flat or full-rewrite
-    * layouts) load through the legacy per-table path. */
+  /** Resume a fold state persisted by [[persist]]: blocks, tx tables,
+    * candles and waves_data from the manifest's segment list (each segment
+    * an explicit path — no directory listing of the whole history), the
+    * dimensions from the version directory, plus the `sync_meta`
+    * uid-generator cursor, so txs appended at the resumed tip height
+    * continue the per-height index rather than re-issuing uids that collide
+    * with persisted rows (ADVICE r3). Fails
+    * when nothing is published under `dir`, or the published version is
+    * missing its manifest or `sync_meta`. */
   def load(spark: SparkSession, dir: String): ChainState = {
-    val tdir = resolvedDir(spark, dir)
-    val manifest = readManifest(spark, tdir)
+    val version = currentVersion(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no published fold state under $dir"))
+    val vdir = s"$dir/v$version"
+    val manifest = readManifest(spark, vdir).getOrElse(
+      throw new IllegalStateException(s"published version $vdir has no _MANIFEST"))
     val (lastHeight, nextIdx, _) = readMeta(spark, dir)
     def read(path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-      manifest match {
-        case Some(m) if path.startsWith("txs_") || path == "blocks_microblocks" ||
-            (path == "candles" && m.candleSegmented) ||
-            (path == "waves_data" && m.wavesSegmented) =>
-          val paths = m.segments.filter(_.table == path).map(s => s"$dir/${s.relPath}")
-          if (paths.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          else spark.read.schema(schema).parquet(paths: _*)
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-        case _ =>
-          spark.read.schema(schema).parquet(s"$tdir/$path")
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*) // drop the height_bucket partition col
-      }
+      if (path.startsWith("txs_") || Set("blocks_microblocks", "candles", "waves_data")(path)) {
+        val paths = manifest.segments.filter(_.table == path).map(s => s"$dir/${s.relPath}")
+        if (paths.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        else spark.read.schema(schema).parquet(paths: _*)
+          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      } else spark.read.schema(schema).parquet(s"$vdir/$path")
     val blocks = read("blocks_microblocks", ReferenceSchemas.blocksMicroblocks)
     val maxUid = blocks.agg(max("uid")).first() match {
       case r if r.isNullAt(0) => 0L
@@ -831,12 +764,15 @@ object ChainSync {
   def lastAppliedBatch(spark: SparkSession, dir: String): Long =
     readMeta(spark, dir)._3
 
+  /** `(uid_last_height, uid_next_idx, last_batch_id)` of the published
+    * version, `(-1, 0, -1)` when nothing is published. A published version
+    * without a readable `sync_meta` fails: resuming with a reset uid cursor
+    * would re-issue tx uids at the tip height. */
   private def readMeta(spark: SparkSession, dir: String): (Int, Long, Long) =
-    try {
-      spark.read.parquet(s"${resolvedDir(spark, dir)}/sync_meta").collect().headOption
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .getOrElse((-1, 0L, -1L))
-    } catch { case _: org.apache.spark.sql.AnalysisException => (-1, 0L, -1L) }
+    currentVersion(spark, dir).fold((-1, 0L, -1L)) { v =>
+      val r = spark.read.parquet(s"$dir/v$v/sync_meta").head()
+      (r.getInt(0), r.getLong(1), r.getLong(2))
+    }
 
   /** The reference's three SQL views over the fold state
     * (`up.sql:420-485`): (decimals, tickers, assets). */

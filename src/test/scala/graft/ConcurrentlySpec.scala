@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.GraftColumnBridge.{concurrently, cut}
@@ -47,7 +47,7 @@ class ConcurrentlySpec extends SparkSpec {
     sc.setJobGroup("concurrently-group", "ConcurrentlySpec")
     try {
       concurrently(spark, Seq(() => spark.range(100).count(), () => spark.range(50).count()))
-      TestListenerBus.drain(sc)
+      GraftListenerBus.drain(sc)
     } finally {
       sc.setLocalProperty("graft.test.tag", null)
       sc.clearJobGroup()

@@ -646,7 +646,7 @@ class PlanShapeSpec extends SparkSpec {
       // construction must not run jobs (the plan-local scan-split probe)
       val single = Tables.parallelizeKernelInput(singleIn)
       val multi = Tables.parallelizeKernelInput(multiIn)
-      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"parallelizeKernelInput ran ${jobs.get()} job(s) at query construction")
       // one-row-group fixture = single scan task -> the round-robin fires

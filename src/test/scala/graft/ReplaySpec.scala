@@ -277,52 +277,47 @@ class ReplaySpec extends SparkSpec {
     assert(ChainSync.dirtyBoundary(fp((0, 10L, "111"), (1, 20L, "222"), (2, 5L, "333"), (3, 1L, "4")), prev) == 3L)
   }
 
-  test("persist writes per-version fingerprints parquet; a legacy fp-line manifest still migrates") {
+  test("persist writes per-version fingerprints parquet; the next persist diffs against it") {
     val dir = java.nio.file.Files.createTempDirectory("graft-fpq-").toString
     val s1 = fold(ChainSync.emptyState(spark),
       bucketBlock("h1", 100, 0, "x1"), bucketBlock("h2", 1100, 1, "x2"),
       bucketBlock("h3", 2100, 2, "x3"))
     ChainSync.persist(s1, dir)
     val m1 = ChainSync.readManifest(spark, s"$dir/v1").get
-    assert(m1.fpParquet, "r14 manifest must flag parquet fingerprints")
-    assert(m1.fingerprints.isEmpty && m1.candleFingerprints.isEmpty,
-      "no fp/cfp text lines expected in an r14 manifest")
     val fps1 = spark.read.parquet(s"$dir/v1/fingerprints")
     assert(fps1.select("kind").distinct().collect().map(_.getString(0)).toSet ==
       Set("blocks", "candles"))
     val frozen1 = m1.segments.filter(_.frozen)
 
-    // LEGACY MIGRATION: rewrite v1 into the pre-r14 manifest format (fp/cfp
-    // text lines, no fpq flag, no parquet) and persist again — the diff
-    // must lift the legacy lines into a frame and still reuse every frozen
-    // segment
-    val lines = new StringBuilder
-    lines.append("cseg 1\nwseg 1\n")
-    fps1.orderBy("kind", "b").collect().foreach { r =>
-      val tag = if (r.getAs[String]("kind") == "blocks") "fp" else "cfp"
-      lines.append(s"$tag ${r.getAs[Int]("b")} ${r.getAs[Long]("n")} ${r.getAs[java.math.BigDecimal]("h").toBigInteger}\n")
-    }
-    m1.segments.foreach { s =>
-      lines.append(s"seg ${s.table} ${s.relPath} ${s.lo} ${s.hi} ${if (s.frozen) 1 else 0}\n")
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/v1/_MANIFEST"),
-      lines.toString.getBytes("UTF-8"))
-    def rmdir(p: java.nio.file.Path): Unit = {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally s.close()
-    }
-    rmdir(java.nio.file.Paths.get(s"$dir/v1/fingerprints"))
-    assert(!ChainSync.readManifest(spark, s"$dir/v1").get.fpParquet)
-
+    // a tip-only append leaves every fingerprint below the tip unchanged:
+    // the parquet diff must reuse every frozen segment
     val s2 = fold(s1, bucketBlock("h4", 2150, 3, "x4"))
     ChainSync.persist(s2, dir)
     val m2 = ChainSync.readManifest(spark, s"$dir/v2").get
-    assert(m2.fpParquet, "migration persist writes the parquet layout")
     assert(m2.segments.filter(_.frozen) == frozen1,
-      s"legacy-manifest diff failed to reuse frozen segments:\n${m2.segments.filter(_.frozen)}\nvs\n$frozen1")
-    same(ChainSync.load(spark, dir).blocks, s2.blocks, "post-migration blocks")
+      s"fingerprint diff failed to reuse frozen segments:\n${m2.segments.filter(_.frozen)}\nvs\n$frozen1")
+    same(ChainSync.load(spark, dir).blocks, s2.blocks, "second-persist blocks")
+  }
+
+  test("load fails when the published version's sync_meta is missing") {
+    // a reset uid cursor would re-issue tx uids at the tip height: a
+    // published version without its sync_meta must not load as fresh
+    val dir = java.nio.file.Files.createTempDirectory("graft-meta-").toString
+    ChainSync.persist(fold(ChainSync.emptyState(spark), block1), dir, lastBatchId = 1L)
+    val meta = java.nio.file.Paths.get(s"$dir/v1/sync_meta")
+    val files = java.nio.file.Files.walk(meta)
+    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally files.close()
+    intercept[org.apache.spark.sql.AnalysisException](ChainSync.load(spark, dir))
+    intercept[org.apache.spark.sql.AnalysisException](ChainSync.lastAppliedBatch(spark, dir))
+  }
+
+  test("readManifest rejects an unknown line") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_MANIFEST"),
+      "fp 0 1 2\n".getBytes("UTF-8"))
+    intercept[IllegalStateException](ChainSync.readManifest(spark, dir))
   }
 
   test("incremental persist: frozen spans are capped — a shallow rollback rewrites O(span), not O(history)") {
@@ -509,11 +504,11 @@ class ReplaySpec extends SparkSpec {
           jobs.incrementAndGet(); ()
         }
       }
-      org.apache.spark.TestListenerBus.drain(sc)
+      org.apache.spark.GraftListenerBus.drain(sc)
       sc.addSparkListener(listener)
       try {
         ChainSync.persist(state, dir, lastBatchId = batch)
-        org.apache.spark.TestListenerBus.drain(sc)
+        org.apache.spark.GraftListenerBus.drain(sc)
       } finally sc.removeSparkListener(listener)
       jobs.get
     }

@@ -292,7 +292,7 @@ class StreamingSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         body
-        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
         jobs.get()
       } finally spark.sparkContext.removeSparkListener(listener)
     }
