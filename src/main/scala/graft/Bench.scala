@@ -4,14 +4,38 @@ object Bench {
   /** Extract the `"queries":{...}` per-query map out of one of our own
     * bench JSON lines (the format is ours, written below — a regex is
     * enough; no JSON library in the unmanaged classpath contract). */
-  private[graft] def parseQueries(line: String): Map[String, Double] = {
-    val start = line.indexOf("\"queries\":{")
+  private[graft] def parseQueries(line: String): Map[String, Double] = parseMap(line, "queries")
+
+  /** The `"first_rep":{...}` map of a bench line: each gate's first-rep
+    * wall time (empty on lines written before the field existed). */
+  private[graft] def parseFirstReps(line: String): Map[String, Double] = parseMap(line, "first_rep")
+
+  /** The per-gate map of field `name` of one of our own bench lines. */
+  private def parseMap(line: String, name: String): Map[String, Double] = {
+    val key = "\"" + name + "\":{"
+    val start = line.indexOf(key)
     if (start < 0) Map.empty
     else {
-      val body = line.substring(start + "\"queries\":{".length, line.indexOf('}', start))
+      val body = line.substring(start + key.length, line.indexOf('}', start))
       """"([A-Za-z0-9_]+)":([0-9.]+)""".r.findAllMatchIn(body)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }
+  }
+
+  private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  private def jsonMap(qs: Map[String, Double]): String =
+    qs.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+  /** One bench line: `qs` (per-gate medians) as `queries` and their total,
+    * then `first_rep`, each gate's first-rep wall time — the cold cost
+    * (per-session memoized work, first JIT) that the median of the reps
+    * hides — then `extra`. */
+  private[graft] def jsonLine(qs: Map[String, Double], firstReps: Map[String, Double],
+      sfDir: String, extra: String = ""): String = {
+    val total = if (qs.nonEmpty) qs.values.sum else 0.0
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(qs)},"sf":"$sfDir",""" +
+      s""""first_rep":${jsonMap(firstReps)}$extra}"""
   }
 
   /** Numeric field extractor for our own bench JSON lines (same regex
@@ -126,7 +150,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_VERBOSE=1 prints per-rep times to stderr
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val verbose = sys.env.contains("SPARK_GRAFT_BENCH_VERBOSE")
-    val results = scala.collection.immutable.ListMap(
+    val timed = scala.collection.immutable.ListMap(
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(q => only.forall(_.contains(q._1))): _*).map { case (name, fn) =>
       val times = (1 to reps).map { _ =>
@@ -146,18 +170,13 @@ object Bench {
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       if (verbose) System.err.println(s"BENCHREP $name ${times.map(t => f"$t%.2f").mkString(" ")}")
-      name -> (if (times.contains(-1.0)) -1.0 else median(times))
+      name -> ((if (times.contains(-1.0)) -1.0 else median(times), times.head))
     }
+    val results = timed.map { case (name, (m, _)) => name -> m }
+    val firstReps = timed.map { case (name, (_, first)) => name -> first }
     val failedNames = results.collect { case (n, v) if v < 0 => n }.toSeq
     if (failedNames.nonEmpty)
       System.err.println(s"BENCH ${failedNames.size} FAILED queries: ${failedNames.mkString(", ")}")
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def jsonLine(qs: Map[String, Double], extra: String = ""): String = {
-      val body = qs.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      val total = if (qs.nonEmpty) qs.values.sum else 0.0
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$body,"sf":"$sfDir"$extra}"""
-    }
 
     // The artifact of record is the per-query MEDIAN across runs, not one
     // noisy sample (VERDICT r5 #3): each invocation appends its own
@@ -184,7 +203,7 @@ object Bench {
     // cross-run medians (bench_out.json r15) — same-sf is not enough.
     val envExtra = s""","cpus":$cpus,"heap_gb":${fmt(heapGb)},""" +
       s""""cpu_probe_1t":${fmt(probe1t)},"cpu_probe_nt":${fmt(probeNt)}"""
-    val thisRun = jsonLine(results, envExtra)
+    val thisRun = jsonLine(results, firstReps, sfDir, envExtra)
     // dev subset runs (BENCH_ONLY) stay out of the history — a 4-query
     // warm-JVM sample would contaminate the full run's cross-run medians —
     // and so does ANY run with failures: r6's history carried 57 ~0.05 s
@@ -250,7 +269,8 @@ object Bench {
       // would hide the breakage from the driver's artifact
       name -> (if (v < 0) -1.0 else median(priorRuns.flatMap(_.get(name)).filter(_ >= 0) :+ v))
     }
-    val line = jsonLine(merged, contendedExtra)
+    // first_rep stays this run's own: a cold cost is not merged across runs
+    val line = jsonLine(merged, firstReps, sfDir, contendedExtra)
     if (only.isEmpty && failedNames.isEmpty) {
       val outName = outFileName(sfDir, cpus)
       try Files.write(Paths.get(outName), (line + "\n").getBytes("UTF-8"))

@@ -1,6 +1,7 @@
 package graft.convert
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.cut
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,7 +96,9 @@ object TxConvert {
 
   /** All 18 typed tables + children, by reference table name. */
   def convert(flat: DataFrame): Map[String, DataFrame] = {
-    val base = common(flat).cache()
+    // the lineage cut, not .cache(): a cached relation stays registered in
+    // the session's CacheManager until unpersisted, one per appended run
+    val base = cut(common(flat))
     def typed(t: Int): DataFrame = base.filter(col("tx_type") === t)
     val prefix = ReferenceSchemas.txsCommon.map(f => col(f.name))
 

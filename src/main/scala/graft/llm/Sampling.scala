@@ -116,8 +116,8 @@ object Sampling {
     // targetsPpm but ABSENT from df must bind the achievable total to 0
     // ("bounded by the scarcest stratum" — an empty stratum is scarcest),
     // not silently drop out of the min (ADVICE r4)
-    val counts = broadcast(targets)
-      .join(df.groupBy(col(strataCol).as("__stratum")).agg(count(lit(1)).as("__n")),
+    val counts = targets
+      .join(broadcast(df.groupBy(col(strataCol).as("__stratum")).agg(count(lit(1)).as("__n"))),
         Seq("__stratum"), "left")
       .withColumn("__n", coalesce(col("__n"), lit(0L)))
     val tmin = counts.agg(min(expr(s"__n * ${Buckets}L div __ppm")).as("__t"))
@@ -142,8 +142,9 @@ object Sampling {
     * `tail_docs = allocated mod n` (the final partial pass — drawn with
     * [[deterministicSample]] downstream), `capped` flags strata whose
     * target exceeded repeatable capacity. Shape: ONE count-per-stratum
-    * aggregation joined to the broadcast literal target table — the
-    * allocation table is strata-bounded. */
+    * aggregation, broadcast into a left join from the literal target
+    * table (the preserved left side of a left join cannot be the build
+    * side) — the allocation table is strata-bounded. */
   def epochAllocation(
       df: DataFrame,
       targetsPpm: Seq[(String, Long)],
@@ -157,8 +158,8 @@ object Sampling {
     val spark = df.sparkSession
     import spark.implicits._
     val targets = targetsPpm.toDF("__stratum", "__ppm")
-    broadcast(targets)
-      .join(df.groupBy(col(strataCol).as("__stratum")).agg(count(lit(1)).as("n_docs")),
+    targets
+      .join(broadcast(df.groupBy(col(strataCol).as("__stratum")).agg(count(lit(1)).as("n_docs"))),
         Seq("__stratum"), "left")
       .withColumn("n_docs", coalesce(col("n_docs"), lit(0L)))
       .withColumn("target_docs", expr(s"${budget}L * __ppm div ${Buckets}L"))

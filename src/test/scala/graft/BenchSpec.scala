@@ -89,4 +89,15 @@ class BenchSpec extends AnyFunSuite {
     val line = """{"metric":"total","value":1.5,"unit":"sec","queries":{"a":0.5},"sf":"/x/sf0.1","heap_gb":48.0,"cpu_probe_1t":1.23,"cpu_probe_nt":1.45}"""
     assert(Bench.parseQueries(line) == Map("a" -> 0.5))
   }
+
+  test("a bench line carries each gate's first rep next to its median") {
+    val line = Bench.jsonLine(Map("a" -> 0.5, "b" -> 1.0), Map("a" -> 9.6, "b" -> 1.25), "/x/sf0.1",
+      ""","cpus":4,"heap_gb":4.0000""")
+    assert(line.startsWith("""{"metric":"total","value":1.5000,"unit":"sec","queries":{"a":0.5000,"b":1.0000},"sf":"/x/sf0.1","""))
+    assert(Bench.parseQueries(line) == Map("a" -> 0.5, "b" -> 1.0))
+    assert(Bench.parseFirstReps(line) == Map("a" -> 9.6, "b" -> 1.25))
+    assert(Bench.parseField(line, "cpus").contains(4.0))
+    // history lines written before the field have no first reps
+    assert(Bench.parseFirstReps("""{"metric":"total","queries":{"a":0.5},"sf":"/x/sf0.1"}""").isEmpty)
+  }
 }

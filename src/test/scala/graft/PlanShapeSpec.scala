@@ -85,10 +85,13 @@ class PlanShapeSpec extends SparkSpec {
 
   test("segment-loaded state: height filter and column pruning reach the multi-path parquet scan") {
     // The incremental persist reads facts back as a MULTI-PATH scan over
-    // frozen + tip segments; at 100 TB the whole design only works if a
-    // height predicate prunes at the scan (segments are written sorted by
-    // height, so row groups carry tight min/max) and projection prunes
-    // columns. Guard both against regressing into a post-scan filter.
+    // frozen + tip segments of the chain family; at 100 TB the whole design
+    // only works if the table tag and a height predicate prune at the scan
+    // (segments are written sorted by table, then height, so row groups
+    // carry tight min/max) and projection prunes columns to the tag plus
+    // the projected ones. Guard both against regressing into a post-scan
+    // filter. The scan node's metadata is read whole: the plan string cuts
+    // each value at spark.sql.maxMetadataStringLength.
     import graft.operators.ChainSync
     import graft.convert.{RawBlock, RawUpdate}
     val sdir = java.nio.file.Files.createTempDirectory("graft-plan-seg-").toString
@@ -99,11 +102,13 @@ class PlanShapeSpec extends SparkSpec {
     ChainSync.persist(st, sdir)
     val q = ChainSync.load(spark, sdir).blocks
       .filter(col("height") >= 1000).select("uid", "height")
-    val plan = executed(q)
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(height,1000)"),
-      s"height filter not pushed to the segment scan:\n$plan")
-    assert(plan.contains("ReadSchema: struct<uid:bigint,height:int>"),
-      s"columns not pruned on the segment scan:\n$plan")
+    val Seq(scan) = executedScans(q)
+    val pushed = scan.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(height,1000)") &&
+      pushed.contains("EqualTo(table,blocks_microblocks)"),
+      s"height or table filter not pushed to the segment scan: $pushed")
+    assert(scan.requiredSchema.simpleString == "struct<table:string,uid:bigint,height:int>",
+      s"columns not pruned on the segment scan: ${scan.requiredSchema.simpleString}")
   }
 
   test("LSH candidate generation performs no cross joins") {

@@ -216,13 +216,13 @@ class ReplaySpec extends SparkSpec {
     same(loaded2.candles, s2.candles, "incremental candles")
 
     // tip advance: bucket 2 freezes EXACTLY once (one new frozen segment
-    // per table, covering [2,2]); buckets 0..1 are never rewritten
+    // per family, covering [2,2]); buckets 0..1 are never rewritten
     val s3 = fold(s2, bucketBlock("h5", 3100, 4, "x5"))
     ChainSync.persist(s3, dir)
     val m3 = ChainSync.readManifest(spark, s"$dir/v3").get
-    val blocksSegs3 = m3.segments.filter(s => s.table == "blocks_microblocks" && s.frozen)
-    assert(blocksSegs3.map(_.relPath).toSet ==
-      Set("segments/blocks_microblocks/s1-f0", "segments/blocks_microblocks/s3-f0"), s"$blocksSegs3")
+    val chainSegs3 = m3.segments.filter(s => s.table == "chain" && s.frozen)
+    assert(chainSegs3.map(_.relPath).toSet ==
+      Set("segments/chain/s1-f0", "segments/chain/s3-f0"), s"$chainSegs3")
     assert(m3.segments.filter(_.relPath.contains("s3-f")).forall(s => s.lo == 2 && s.hi == 2))
     val new3 = segFiles(dir) -- after2
     assert(new3.forall(f => f.contains("/s3-f") || f.contains("/s3-t/")),
@@ -331,7 +331,7 @@ class ReplaySpec extends SparkSpec {
     val s1 = fold(ChainSync.emptyState(spark), blocks: _*)
     ChainSync.persist(s1, dir)
     val m1 = ChainSync.readManifest(spark, s"$dir/v1").get
-    val frozen1 = m1.segments.filter(s => s.table == "blocks_microblocks" && s.frozen)
+    val frozen1 = m1.segments.filter(s => s.table == "chain" && s.frozen)
     assert(frozen1.map(s => (s.lo, s.hi)).toSet == Set((0, 7), (8, 8)),
       s"bootstrap freeze not span-capped: $frozen1")
     val after1 = segFiles(dir)
@@ -350,6 +350,89 @@ class ReplaySpec extends SparkSpec {
     same(loaded.facts("txs_7"), rolled.facts("txs_7"), "span-cap txs_7")
     val clean = fold(ChainSync.emptyState(spark), blocks.take(9): _*)
     same(loaded.blocks, clean.blocks, "span-cap blocks vs clean replay")
+  }
+
+  test("chain family: a rollback below a frozen window rewrites that window once") {
+    // ten buckets freeze as windows [0,7] and [8,8] under the span cap; a
+    // rollback into bucket 3 invalidates window 0, which is rewritten as ONE
+    // chain segment covering the surviving [0,2] (not one per table), and
+    // window 1's segment is dropped with the buckets it held
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain-rb-").toString
+    val blocks = (0 to 9).map(b => bucketBlock(s"cr$b", 100 + b * 1000, b, s"crx$b"))
+    val s1 = fold(ChainSync.emptyState(spark), blocks: _*)
+    ChainSync.persist(s1, dir)
+    val after1 = segFiles(dir)
+    val rolled = fold(s1, RawRollback("cr3")) // buckets 4..9 gone; bucket 3 is the tip
+    ChainSync.persist(rolled, dir)
+    val chain2 = ChainSync.readManifest(spark, s"$dir/v2").get.segments.filter(_.table == "chain")
+    assert(chain2.map(s => (s.relPath, s.lo, s.hi, s.frozen)).toSet == Set(
+      ("segments/chain/s2-f0", 0, 2, true), ("segments/chain/s2-t", 3, 3, false)), s"$chain2")
+    val new2 = (segFiles(dir) -- after1).map(_.split('/').take(3).mkString("/"))
+    assert(new2 == Set("segments/candles/s2-t", "segments/chain/s2-f0", "segments/chain/s2-t"), s"$new2")
+    // no per-table segment directory (these blocks carry no waves amount)
+    val families = new java.io.File(s"$dir/segments").listFiles().map(_.getName).toSet
+    assert(families == Set("chain", "candles"), s"$families")
+    // the rollback's USING semi join moves tx_uid to the front of the child
+    // tables in memory; load returns the reference order, so compare by name
+    val inOrder = rolled.copy(facts = rolled.facts.map { case (t, df) =>
+      t -> df.select(graft.schema.ReferenceSchemas.tables(t).fieldNames.map(col).toIndexedSeq: _*)
+    })
+    sameState(ChainSync.load(spark, dir), inOrder, "rollback below a frozen window:")
+    sameState(inOrder, fold(ChainSync.emptyState(spark), blocks.take(4): _*), "rollback vs clean replay:")
+  }
+
+  test("chain family: tables without rows load as empty frames of their reference schema") {
+    // block1 carries only exchanges: the other 23 tx tables have no row in
+    // the family file and must still load, typed as ReferenceSchemas says
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain-empty-").toString
+    val state = fold(ChainSync.emptyState(spark), block1)
+    ChainSync.persist(state, dir)
+    val loaded = ChainSync.load(spark, dir)
+    ChainSync.ChainTables.foreach { t =>
+      val df = if (t == "blocks_microblocks") loaded.blocks else loaded.facts(t)
+      val expected = graft.schema.ReferenceSchemas.tables(t)
+      assert(df.schema.map(f => f.name -> f.dataType) == expected.map(f => f.name -> f.dataType),
+        s"$t loaded as ${df.schema.simpleString}")
+    }
+    assert(loaded.facts("txs_7").count() == 2 && loaded.blocks.count() == 1)
+    assert((loaded.facts - "txs_7").forall(_._2.isEmpty), "a table absent from the batch loaded rows")
+    sameState(loaded, state, "one-type batch:")
+  }
+
+  test("every file of a published version is zstd Parquet") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = java.nio.file.Files.createTempDirectory("graft-zstd-").toString
+    ChainSync.persist(fold(ChainSync.emptyState(spark), block1, block2), dir)
+    val m = ChainSync.readManifest(spark, s"$dir/v1").get
+    val roots = java.nio.file.Paths.get(dir, "v1") +: m.segments.map(s => java.nio.file.Paths.get(dir, s.relPath))
+    val data = roots.flatMap { r =>
+      val w = java.nio.file.Files.walk(r)
+      try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toVector finally w.close()
+    }.filterNot(p => p.getFileName.toString.startsWith(".") || p.getFileName.toString.startsWith("_"))
+    // sync_meta, fingerprints, 3 dimensions, the chain, candles and
+    // waves_data tip segments
+    assert(data.size >= 8, s"$data")
+    val conf = spark.sessionState.newHadoopConf()
+    data.foreach { p =>
+      assert(p.getFileName.toString.endsWith(".zstd.parquet"), s"$p")
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), conf))
+      val codecs = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+        finally reader.close()
+      assert(codecs.forall(_ == CompressionCodecName.ZSTD), s"$p: $codecs")
+    }
+  }
+
+  test("the fold leaves nothing in the session's cache manager") {
+    // a cached relation stays registered until unpersisted: one per
+    // appended run would grow without bound over a long-running sync
+    spark.catalog.clearCache()
+    val b3 = RawBlock("b3", 102, Some(t0 + 120000), None, Seq(exchange("e6", t0 + 120000, 20, 400, ("AA", "PP"))))
+    val folded = Seq(block1, block2, b3).foldLeft(ChainSync.emptyState(spark))((st, b) => fold(st, b))
+    assert(folded.facts("txs_7").count() == 5)
+    assert(spark.sharedState.cacheManager.isEmpty, "the fold left cached relations behind")
   }
 
   test("incremental persist: waves_data segments are append-only frozen; rollback never rewrites them") {
@@ -450,7 +533,7 @@ class ReplaySpec extends SparkSpec {
     final class SimulatedCrash extends RuntimeException("crash mid-segments")
     intercept[SimulatedCrash] {
       ChainSync.persist(s2, dir, lastBatchId = 2L,
-        onTableWritten = name => if (name == "txs_7") throw new SimulatedCrash)
+        onTableWritten = name => if (name == "chain") throw new SimulatedCrash)
     }
     // pointer still on v1: the orphaned v2 segments are invisible
     val loaded = ChainSync.load(spark, dir)
@@ -474,7 +557,7 @@ class ReplaySpec extends SparkSpec {
     same(loaded.candles, expect.candles, s"$label candles")
   }
 
-  test("parallel persist: a crash on the first-listed table leaves no straggler write behind") {
+  test("parallel persist: a crash on the chain family leaves no straggler write behind") {
     // persist's table writes run concurrently; a crash surfaces only once
     // every sibling write has finished, so an immediate re-persist into the
     // same v<N> races no write still landing from the crashed attempt
@@ -483,18 +566,18 @@ class ReplaySpec extends SparkSpec {
       bucketBlock("p1", 100, 0, "px1"), bucketBlock("p2", 1100, 1, "px2"))
     ChainSync.persist(s1, dir, lastBatchId = 1L)
     val s2 = fold(s1, bucketBlock("p3", 2100, 2, "px3"), block2)
-    final class SimulatedCrash extends RuntimeException("crash on the first table")
+    final class SimulatedCrash extends RuntimeException("crash on the chain family")
     intercept[SimulatedCrash] {
       ChainSync.persist(s2, dir, lastBatchId = 2L,
-        onTableWritten = name => if (name == "blocks_microblocks") throw new SimulatedCrash)
+        onTableWritten = name => if (name == "chain") throw new SimulatedCrash)
     }
     assert(ChainSync.lastAppliedBatch(spark, dir) == 1L)
     ChainSync.persist(s2, dir, lastBatchId = 2L)
-    sameState(ChainSync.load(spark, dir), s2, "re-persist after a first-table crash:")
+    sameState(ChainSync.load(spark, dir), s2, "re-persist after a chain-family crash:")
     assert(ChainSync.lastAppliedBatch(spark, dir) == 2L)
   }
 
-  test("parallel persist: a one-bucket state costs one write job per table plus fixed probes") {
+  test("parallel persist: a one-bucket state costs one job per write plus fixed probes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-par-jobs-").toString
     val sc = spark.sparkContext
     def persistJobs(state: ChainState, batch: Long): Int = {
@@ -515,21 +598,21 @@ class ReplaySpec extends SparkSpec {
     // heights 100-101 and one minute of trades: one height bucket, one week
     val s1 = fold(ChainSync.emptyState(spark), block1)
     val s2 = fold(s1, block2)
-    // one write job per table: sync_meta, blocks + the fact tables,
-    // candles, the three dimensions, waves_data and the fingerprints
-    val tables = 1 + (1 + s1.facts.size) + 1 + 3 + 1 + 1
+    // one job per write: sync_meta, the chain family (blocks + the 24 tx
+    // tables in one file), candles, the three dimensions, waves_data and
+    // the fingerprints
+    val writes = 8
     // the fixed part: the three bucket frames (blocks, candles, waves_data),
-    // their max-bucket and freeze-range probes (one freeze collect per frame,
-    // however many tables share it) and the shuffle stages of the grouping
-    // and sorting plans — 52 jobs in all for 32 tables on Spark 4.1; a range
-    // shuffle per one-bucket segment or a freeze collect per table would
-    // each add about one job per table
+    // their max-bucket and freeze-range probes and the shuffle stages of the
+    // grouping and sorting plans; a write job per table (the per-table
+    // layout: 32 writes, 52 jobs) or a range shuffle per one-bucket segment
+    // would break the pin
     val first = persistJobs(s1, 1L)
-    assert(first <= tables + 20, s"first persist ran $first jobs for $tables tables")
+    assert(first <= writes + 20, s"first persist ran $first jobs for $writes writes")
     // a later persist adds the two fingerprint diffs against the previous
-    // version (62 jobs on Spark 4.1)
+    // version
     val second = persistJobs(s2, 2L)
-    assert(second <= tables + 30, s"second persist ran $second jobs for $tables tables")
+    assert(second <= writes + 30, s"second persist ran $second jobs for $writes writes")
     sameState(ChainSync.load(spark, dir), s2, "one-bucket persist:")
   }
 
@@ -543,7 +626,7 @@ class ReplaySpec extends SparkSpec {
     val rnd = new scala.util.Random(20260813L)
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-chaos-").toString
     final class SimulatedCrash extends RuntimeException("chaos crash")
-    val crashTables = Vector("blocks_microblocks", "txs_7", "candles", "sync_meta")
+    val crashTables = Vector("chain", "candles", "sync_meta")
 
     var state = ChainSync.emptyState(spark)
     var applied = Vector.empty[RawBlock] // surviving chain in order
@@ -707,7 +790,7 @@ class ReplaySpec extends SparkSpec {
     val rnd = new scala.util.Random(0xC6A05L)
     val dir = java.nio.file.Files.createTempDirectory("graft-restart-chaos-").toString
     final class SimulatedCrash extends RuntimeException("restart chaos crash")
-    val crashTables = Vector("blocks_microblocks", "txs_7", "candles", "sync_meta")
+    val crashTables = Vector("chain", "candles", "sync_meta")
     def publishedYet: Boolean = new java.io.File(s"$dir/_CURRENT").exists()
 
     var schedule = Vector.empty[Seq[RawUpdate]]
