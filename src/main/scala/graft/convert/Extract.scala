@@ -41,7 +41,7 @@ object Extract {
     * gates min_sponsored_fee. Output matches the `asset_updates` schema
     * (`up.sql:19-34`) with `superseded_by` open (MAX_UID) — batch linking
     * is `Scd2.linkBatch/applyBatch`. */
-  def assetUpdates(flat: DataFrame, chainId: Byte = TxConvert.ChainId): DataFrame =
+  def assetUpdates(flat: DataFrame): DataFrame =
     flat
       .select(col("uid"), col("block_uid"), col("height"),
         posexplode(col("tx.assetStateUpdates")).as(Seq("position", "au")))
@@ -65,7 +65,7 @@ object Extract {
     * the FIRST update's row (`pg.rs:205-214`), which
     * [[graft.operators.ChainSync]] applies via `Merge.insertIgnore`.
     * Output matches `asset_origins` (`up.sql:36-43`). */
-  def assetOrigins(flat: DataFrame, chainId: Byte = TxConvert.ChainId): DataFrame =
+  def assetOrigins(flat: DataFrame): DataFrame =
     flat
       .select(col("uid"), col("height"),
         col("tx.id").as("__tx_id"), col("tx.timeStampMs").as("__ts"),
@@ -75,7 +75,7 @@ object Extract {
         b58(col("au.assetId")).as("asset_id"),
         updateUid.as("first_asset_update_uid"),
         b58(col("__tx_id")).as("origin_transaction_id"),
-        graft.plans.GraftExtensions.wavesAddress(col("au.issuer"), lit(chainId.toInt)).as("issuer"),
+        graft.plans.GraftExtensions.wavesAddress(col("au.issuer"), lit(TxConvert.ChainId.toInt)).as("issuer"),
         col("height").as("issue_height"),
         timestamp_millis(col("__ts")).as("issue_time_stamp"))
 

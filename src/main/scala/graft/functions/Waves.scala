@@ -1,9 +1,7 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-
 /** Waves-chain domain helpers: address derivation, asset-id normalization,
-  * prefixed encodings, unicode-NUL escaping, epoch conversion.
+  * prefixed encodings, unicode-NUL escaping.
   *
   * Semantics mirrored from `/root/reference/src/lib/waves.rs:15-85` and
   * `/root/reference/src/lib/utils.rs:3-24`; implementations are from public
@@ -59,8 +57,6 @@ object Waves {
   def extractAssetId(assetId: Array[Byte]): String =
     if (assetId == null || assetId.isEmpty) WavesId else Base58.encode(assetId)
 
-  def isWavesAssetId(assetId: Array[Byte]): Boolean = extractAssetId(assetId) == WavesId
-
   /** `into_prefixed_base64` (`utils.rs:7-15`): empty ⇒ "", else "base64:…". */
   def prefixedBase64(b: Array[Byte]): String =
     if (b == null || b.isEmpty) ""
@@ -77,9 +73,6 @@ object Waves {
   def escapeUnicodeNull(s: String): String =
     if (s == null) null else s.replace("\u0000", "\\0")
 
-  /** `epoch_ms_to_naivedatetime` (`utils.rs:17-20`). */
-  def epochMsToTimestamp(ms: Long): java.sql.Timestamp = new java.sql.Timestamp(ms)
-
   /** Data-entry ticker key parser — `frag_parse!("%s%s__assetId2ticker__<id>")`
     * (`mod.rs:548-581`). Returns the trailing asset id, or None. */
   private val TickerKey = "^(.*?)__assetId2ticker__(.+)$".r
@@ -87,6 +80,4 @@ object Waves {
     case TickerKey(_, assetId) => Some(assetId)
     case _ => None
   }
-
-  def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

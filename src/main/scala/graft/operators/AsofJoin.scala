@@ -534,7 +534,7 @@ object AsofJoin {
 
   /** Hot-key audit for the as-of family: keys whose combined probe+ref
     * row count exceeds `threshold` — one cheap map-side-partial count per
-    * live key, the [[graft.operators.Candles.hotPairs]] convention. */
+    * live key, so the shuffle carries one row per key. */
   def hotKeys(
       probe: DataFrame,
       reference: DataFrame,
@@ -549,8 +549,8 @@ object AsofJoin {
   /** Skew-aware backward as-of: time-slice ([[backwardSliced]]) only when
     * some key exceeds `hotKeyRowThreshold` rows across both sides (one
     * cheap count-per-key pass), else the plain single-window
-    * [[backward]] — the [[graft.operators.Candles.minuteCandlesAuto]]
-    * dispatch convention applied to the as-of family. Both paths are
+    * [[backward]] — the same [[hotKeys]] dispatch as [[nearestAuto]] and
+    * [[backwardWithinAuto]]. Both paths are
     * hash-identical (o41e reuses o41's oracle verbatim), so the dispatch
     * can never change results, only the plan. */
   def backwardAuto(

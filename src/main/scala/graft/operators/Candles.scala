@@ -140,79 +140,6 @@ object Candles {
         filtered.withColumn("__price", col("price").cast(money))
     }
 
-  /** Hot-pair audit: rows per (pair, matcher) group above `threshold`.
-    * Cheap even at scale — map-side partial counts reduce the shuffle to
-    * one row per live group. Drive [[minuteCandlesAuto]]'s salting choice
-    * from this (or from table statistics). */
-  def hotPairs(trades: DataFrame, threshold: Long): DataFrame =
-    trades.groupBy("amount_asset_id", "price_asset_id", "sender")
-      .agg(count(lit(1)).as("rows"))
-      .filter(col("rows") > threshold)
-
-  /** Minute candles with two-phase salted aggregation (SURVEY §4 watch
-    * list): phase 1 spreads each (minute, pair, matcher) group over
-    * `saltBuckets` reducers keyed by a uid-hash salt, phase 2 combines
-    * partials on the true keys — so one hot pair can no longer bottleneck a
-    * single reducer. All candle measures are algebraic (min/max/sum/count;
-    * open/close via min_by/max_by carrying uid through both phases);
-    * weighted_average_price is re-derived from the combined sums, which is
-    * exactly its unsalted definition floor(Σap / Σa). Output ≡
-    * [[minuteCandles]] (CandlesSpec pins the equivalence). */
-  def minuteCandlesSalted(
-      trades: DataFrame,
-      decimals: Option[DataFrame] = None,
-      since: Option[Timestamp] = None,
-      saltBuckets: Int = 16): DataFrame = {
-    import Skew._
-    val filtered = since.map(ts => trades.filter(col("time_stamp") >= lit(ts))).getOrElse(trades)
-    val priced = pricedTrades(filtered, decimals)
-    val keys = Seq(col("time_start"), col("amount_asset_id"), col("price_asset_id"), col("matcher_address"))
-    val prepared = priced.select(
-      date_trunc("minute", col("time_stamp")).as("time_start"),
-      col("amount_asset_id"), col("price_asset_id"),
-      col("sender").as("matcher_address"),
-      col("uid"), col("height"),
-      col("amount").cast(money).as("__amount"),
-      col("__price"))
-    Skew.saltedAggregate(
-      prepared,
-      keys,
-      Seq(
-        minOf(col("__price"), "low"),
-        maxOf(col("__price"), "high"),
-        sumOf(col("__amount"), "__vol_raw"),
-        sumOf(col("__amount") * col("__price"), "__qvol_raw"),
-        maxOf(col("height"), "max_height"),
-        // count over __price, not count(*), keeping the salted plan
-        // definitionally identical to minuteCandles' count(__price)
-        countOf(col("__price"), "__txs_raw"),
-        minByOf(col("__price"), col("uid"), "open"),
-        maxByOf(col("__price"), col("uid"), "close")),
-      saltBuckets,
-      saltSource = col("uid"))
-      .withColumn("volume", col("__vol_raw").cast(money))
-      .withColumn("quote_volume", col("__qvol_raw").cast(money))
-      .withColumn("txs_count", col("__txs_raw").cast("int"))
-      .withColumn("weighted_average_price",
-        floor(col("__qvol_raw") / col("__vol_raw")).cast(money))
-      .withColumn("interval", lit("1m"))
-      .select(ReferenceSchemas.candles.fieldNames.map(col).toIndexedSeq: _*)
-  }
-
-  /** Skew-aware minute candles: salt only when some (pair, matcher) group
-    * exceeds `hotPairRowThreshold` rows (one cheap count-per-group pass),
-    * else the plain single-shuffle aggregation. */
-  def minuteCandlesAuto(
-      trades: DataFrame,
-      decimals: Option[DataFrame] = None,
-      since: Option[Timestamp] = None,
-      hotPairRowThreshold: Long = 10000000L,
-      saltBuckets: Int = 16): DataFrame =
-    if (hotPairs(trades, hotPairRowThreshold).isEmpty)
-      minuteCandles(trades, decimals, since)
-    else
-      minuteCandlesSalted(trades, decimals, since, saltBuckets)
-
   /** One hash-repartition on (pair, matcher) that makes every downstream
     * ladder aggregation shuffle-free: HashPartitioning on a subset of the
     * grouping keys satisfies the grouping's ClusteredDistribution, so the

@@ -51,7 +51,7 @@ object ChainSync {
 
   /** Ticker extraction needs the asset-storage account; configurable like
     * the reference's `asset_storage_address` env (`config/consumer.rs`). */
-  final case class Config(chainId: Byte = TxConvert.ChainId, assetStorageAddress: Option[String] = None)
+  final case class Config(assetStorageAddress: Option[String] = None)
 
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -170,7 +170,7 @@ object ChainSync {
       name -> converted.get(name).map(df.unionByName(_)).getOrElse(df)
     }
 
-    val assetDim = Scd2.applyBatch(state.assetUpdates, Extract.assetUpdates(flat, config.chainId))
+    val assetDim = Scd2.applyBatch(state.assetUpdates, Extract.assetUpdates(flat))
     val tickerDim = config.assetStorageAddress match {
       case Some(addr) => Scd2.applyBatch(state.assetTickers, Extract.assetTickers(flat, addr))
       case None => state.assetTickers
@@ -179,7 +179,7 @@ object ChainSync {
     // (pg.rs:205-214). In-batch the winner is picked with min_by on the
     // update uid — dropDuplicates alone keeps an ARBITRARY row under
     // parallelism, which would make origins partitioning-dependent.
-    val originCandidates = Extract.assetOrigins(flat, config.chainId)
+    val originCandidates = Extract.assetOrigins(flat)
     val originCols = originCandidates.columns.filterNot(_ == "asset_id")
     val firstPerAsset = originCandidates
       .groupBy("asset_id")
@@ -283,8 +283,9 @@ object ChainSync {
     val parents = state.facts.filter(_._2.columns.contains("block_uid"))
     val rolledParents = Pipeline.rollbackFacts(parents, cut)
     val rolledChildren = ChildParent.map { case (c, p) =>
-      c -> state.facts(c).join(
-        rolledParents(p).select(col("uid").as("tx_uid")), Seq("tx_uid"), "left_semi")
+      val child = state.facts(c)
+      c -> child.join(rolledParents(p).select(col("uid").as("tx_uid")), Seq("tx_uid"), "left_semi")
+        .select(child.columns.map(col).toIndexedSeq: _*)
     }
     val facts = rolledParents ++ rolledChildren
     val assetDim = Scd2.rollback(state.assetUpdates, cut)
@@ -363,10 +364,10 @@ object ChainSync {
     * O(batch) new bytes, not O(corpus) — the reference appends one batch per
     * transaction (`pg.rs:841-872`).
     *
-    * The 25 height-keyed tables ([[ChainTables]]: `blocks_microblocks` and
-    * the 24 tx tables) share ONE segment family, `chain`: each segment is a
-    * single Parquet file holding every table's rows of its buckets, each row
-    * tagged with its table name in the `table` column ([[ChainSchema]]) and
+    * The 25 height-keyed tables (`blocks_microblocks` and the 24 tx tables)
+    * share ONE segment family, [[Chain]]: each segment is a single Parquet
+    * file holding every table's rows of its buckets, each row tagged with
+    * its table name in the `table` column ([[Family]]) and
     * sorted by (`table`, `height`, `uid`, `tx_uid`), so a table's rows are
     * contiguous and its reads prune row groups on the tag. One file per
     * segment instead of one per table saves 24 write jobs, 24 footers and
@@ -375,8 +376,11 @@ object ChainSync {
     * (recomputeSince / rollback), so past weeks freeze; per-week
     * fingerprints detect a deep rollback's recompute and invalidate from the
     * first changed week. `waves_data` is append-only and segments by height
-    * without fingerprints. Only the dimension tables (SCD-2 dims, origins —
-    * small, MERGE semantics) are rewritten per version. Every file is
+    * without fingerprints; it keeps its own family because its `quantity`
+    * is DECIMAL(38,0) where `txs_3`/`txs_5` have BIGINT. The three
+    * dimension tables (SCD-2 dims, origins — small, MERGE semantics) are
+    * rewritten per version as one tagged family file, `v<N>/dimensions`
+    * ([[Dimensions]]), sorted by (`table`, `asset_id`, `uid`). Every file is
     * zstd-compressed Parquet ([[graft.sinks.TableStore.writeParquet]]).
     *
     * Which buckets are reusable is decided by ONE tiny job over the blocks
@@ -395,11 +399,13 @@ object ChainSync {
     * may legitimately mutate it.
     *
     * ATOMIC across tables (≙ the reference's one transaction around
-    * blocks+txs+candles, `mod.rs:168-186` / `pg.rs:51-63`): segments and
-    * small tables are written first, then the version's `_MANIFEST`, and
-    * only then is the version PUBLISHED by an atomic rename of the
-    * `_CURRENT` pointer file. A crash anywhere mid-write leaves the pointer
-    * on the previous version — orphaned segments/dirs are swept by the next
+    * blocks+txs+candles and the consumer state, `mod.rs:168-186` /
+    * `pg.rs:51-63`): segments and version files are written first, then the
+    * version's `_MANIFEST` (its segments and the consumer cursor,
+    * [[SyncMeta]]), and only then is the version PUBLISHED by an atomic
+    * rename of the `_CURRENT` pointer file. A crash anywhere mid-write leaves
+    * the pointer on the previous version — orphaned segments/dirs are swept
+    * by the next
     * successful persist. Rename atomicity: POSIX rename(2) locally / HDFS
     * rename via `FileContext(Options.Rename.OVERWRITE)` — an object store
     * would need a conditional put or a commit service instead.
@@ -411,15 +417,15 @@ object ChainSync {
     * Single-writer is still assumed (two concurrent persists would race on
     * the same v<N>).
     *
-    * The writes (sync_meta, the chain family, candles + fingerprints, the
-    * three dimensions, waves_data) are independent, so they run as one
+    * The writes (the chain family, candles + fingerprints, the dimensions,
+    * waves_data) are independent, so they run as one
     * [[org.apache.spark.sql.GraftColumnBridge.concurrently]] fan-out of
     * Spark jobs; the manifest keeps their input order. Atomicity is
     * unchanged: `concurrently` joins every write before it returns or
     * throws, and only then are the manifest written and `_CURRENT` swapped.
     *
     * `onTableWritten` is a progress hook (called with each written unit's
-    * name — `sync_meta`, `chain`, `candles`, `waves_data` — after its write
+    * name — `chain`, `candles`, `dimensions`, `waves_data` — after its write
     * completes) — also how the crash-injection test severs a persist
     * mid-way. It runs on pool threads, possibly several at once and in any
     * order. */
@@ -427,7 +433,6 @@ object ChainSync {
       onTableWritten: String => Unit = _ => ()): Unit = {
     import graft.sinks.TableStore
     val spark = state.blocks.sparkSession
-    import spark.implicits._
     val prevVersion = currentVersion(spark, dir)
     val version = prevVersion.getOrElse(0L) + 1L
     val vdir = s"$dir/v$version"
@@ -501,22 +506,11 @@ object ChainSync {
       val dirtyFrom: Long = prevVersion.fold(Long.MinValue)(v =>
         dirtyBoundary(fpDf, prevFingerprintDf(spark, dir, v, "blocks")))
       val boundary = math.min(dirtyFrom, tipBucket.toLong)
-      planSegments(ChainFamily, chainFrame(state), fpDf, tipBucket,
-        prevSegments(ChainFamily, _.hi < boundary), heightBucketCol,
+      planSegments(Chain.name, Chain.frame(state.facts + ("blocks_microblocks" -> state.blocks)),
+        fpDf, tipBucket, prevSegments(Chain.name, _.hi < boundary), heightBucketCol,
         Seq("table", "height", "uid", "tx_uid").map(col))
     }
 
-    // one-row sync_meta carries everything not recoverable from the tables:
-    // the uid-generator cursor (so a resume at the same height CONTINUES the
-    // per-height index instead of re-issuing colliding tx uids) and the last
-    // applied streaming batch id (so a checkpoint-replayed batch is
-    // recognized and skipped — ADVICE r3)
-    def writeSyncMeta(): Seq[SegmentRef] = {
-      TableStore.writeParquet(Seq((state.uidLastHeight, state.uidNextIdx, lastBatchId))
-        .toDF("uid_last_height", "uid_next_idx", "last_batch_id").coalesce(1), s"$vdir/sync_meta")
-      onTableWritten("sync_meta")
-      Nil
-    }
     // Candles: the same incremental machinery keyed by time_start WEEK.
     // The fold mutates candles only from a recent cut-off (recomputeSince/
     // rollback), so history weeks freeze exactly like passed height
@@ -543,8 +537,15 @@ object ChainSync {
         Seq(col("time_start"), col("interval"), col("amount_asset_id"),
           col("price_asset_id"), col("matcher_address")))
     }
-    def writeDimension(name: String, sorted: DataFrame): Seq[SegmentRef] = {
-      TableStore.writeParquet(sorted, s"$vdir/$name")
+    // the dimensions: one file, sorted within its one partition (a global
+    // sort would add a range-sampling job)
+    def writeDimensions(): Seq[SegmentRef] = {
+      TableStore.writeParquet(Dimensions.frame(Map(
+        "asset_updates" -> state.assetUpdates,
+        "asset_tickers" -> state.assetTickers,
+        "asset_origins" -> state.assetOrigins)).coalesce(1)
+        .sortWithinPartitions("table", "asset_id", "uid"), s"$vdir/${Dimensions.name}")
+      onTableWritten(Dimensions.name)
       Nil
     }
     // waves_data: append-only by CONSTRUCTION (insert-ignore keyed by
@@ -561,49 +562,59 @@ object ChainSync {
     // concurrent fan-out, and their segment lists come back in this order,
     // which is the manifest's
     val segs = concurrently(spark, Seq(
-      () => writeSyncMeta(),
       () => writeChain(),
       () => writeCandles(),
-      () => writeDimension("asset_updates", state.assetUpdates.sort("asset_id", "uid")),
-      () => writeDimension("asset_tickers", state.assetTickers.sort("asset_id", "uid")),
-      () => writeDimension("asset_origins", state.assetOrigins.sort("asset_id")),
+      () => writeDimensions(),
       () => writeWavesData())).flatten
-    writeManifest(spark, vdir, segs)
+    writeManifest(spark, vdir,
+      Manifest(segs, SyncMeta(state.uidLastHeight, state.uidNextIdx, lastBatchId)))
     publishVersion(spark, dir, version)
     cleanupVersions(spark, dir, current = version)
   }
 
-  /** The segment family the height-keyed tables persist in. */
-  private[graft] val ChainFamily = "chain"
-
-  /** The height-keyed tables of the `chain` family: blocks and the 24 tx
-    * tables (18 typed + 6 children), in manifest order. */
-  private[graft] val ChainTables: Seq[String] =
-    "blocks_microblocks" +: ReferenceSchemas.tables.keys.filter(_.startsWith("txs_")).toSeq.sorted
-
-  /** The `chain` family's file schema, derived from [[ReferenceSchemas]]:
-    * the `table` tag, then every column of the [[ChainTables]] by name, in
-    * first-seen order, nullable (a table without the column stores null).
-    * A column name that two tables type differently fails here, at class
-    * initialization, before any state is written. */
-  private[graft] val ChainSchema: StructType = {
-    val fields = ChainTables.flatMap(t => ReferenceSchemas.tables(t).fields)
-    val columns = fields.map(_.name).distinct.map { name =>
-      val types = fields.filter(_.name == name).map(_.dataType).distinct
-      require(types.size == 1, s"chain family: column $name has types ${types.mkString(", ")}")
-      StructField(name, types.head, nullable = true)
+  /** Several tables persisted as one Parquet frame, each row tagged with
+    * its table name in the `table` column. The file schema is derived from
+    * [[ReferenceSchemas]]: the tag, then every column of the tables by
+    * name, in first-seen order, nullable (a table without the column stores
+    * null). A column name that two tables type differently fails here, at
+    * class initialization, before any state is written. */
+  private[graft] final case class Family(name: String, tables: Seq[String]) {
+    val schema: StructType = {
+      val fields = tables.flatMap(t => ReferenceSchemas.tables(t).fields)
+      val columns = fields.map(_.name).distinct.map { c =>
+        val types = fields.filter(_.name == c).map(_.dataType).distinct
+        require(types.size == 1, s"$name family: column $c has types ${types.mkString(", ")}")
+        StructField(c, types.head, nullable = true)
+      }
+      require(!columns.exists(_.name == "table"), s"$name family: a table has a column named `table`")
+      StructType(StructField("table", StringType, nullable = false) +: columns)
     }
-    require(!columns.exists(_.name == "table"), "chain family: a table has a column named `table`")
-    StructType(StructField("table", StringType, nullable = false) +: columns)
+
+    /** `frames` (by table) tagged with their table names, unioned by name. */
+    def frame(frames: Map[String, DataFrame]): DataFrame =
+      tables.map(t => frames(t).withColumn("table", lit(t)))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+
+    /** Table `name` read back from the family files at `paths`: its rows by
+      * the tag (a filter the Parquet scan pushes down), projected to its
+      * [[ReferenceSchemas]] columns; an empty frame of that schema when
+      * there are no files. */
+    def read(spark: SparkSession, paths: Seq[String], name: String): DataFrame = {
+      val table = ReferenceSchemas.tables(name)
+      if (paths.isEmpty) emptyFrame(spark, table)
+      else spark.read.schema(schema).parquet(paths: _*).filter(col("table") === name)
+        .select(table.fieldNames.map(col).toIndexedSeq: _*)
+    }
   }
 
-  /** The state's [[ChainTables]] as one frame of [[ChainSchema]]: each
-    * table tagged with its name, then unioned by column name. */
-  private def chainFrame(state: ChainState): DataFrame =
-    ChainTables.map { t =>
-      (if (t == "blocks_microblocks") state.blocks else state.facts(t)).withColumn("table", lit(t))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-      .select(ChainSchema.fieldNames.map(col).toIndexedSeq: _*)
+  /** The height-keyed tables' segment family: blocks and the 24 tx tables
+    * (18 typed + 6 children), in manifest order. */
+  private[graft] val Chain: Family = Family("chain",
+    "blocks_microblocks" +: ReferenceSchemas.tables.keys.filter(_.startsWith("txs_")).toSeq.sorted)
+
+  /** The three dimension tables' version-local family. */
+  private[graft] val Dimensions = Family("dimensions", Seq("asset_updates", "asset_tickers", "asset_origins"))
 
   // ---- versioned-layout plumbing (two-phase commit) ----------------------
 
@@ -623,78 +634,79 @@ object ChainSync {
   private[graft] final case class SegmentRef(
       table: String, relPath: String, lo: Int, hi: Int, frozen: Boolean)
 
+  /** The consumer state the tables cannot give back: the tx-uid cursor (a
+    * resume at the same height CONTINUES the per-height index) and the last
+    * applied streaming batch id (a replayed batch is skipped — ADVICE r3). */
+  private[graft] final case class SyncMeta(uidLastHeight: Int, uidNextIdx: Long, lastBatchId: Long)
+
   /** Per-version manifest: one `seg <family> <rel> <lo> <hi> <frozen>`
     * line per segment of the segmented families (`chain`, `candles`,
-    * `waves_data`). */
-  private[graft] final case class Manifest(segments: Seq[SegmentRef])
+    * `waves_data`) and exactly one
+    * `meta <uid_last_height> <uid_next_idx> <last_batch_id>` line. */
+  private[graft] final case class Manifest(segments: Seq[SegmentRef], meta: SyncMeta)
 
-  private def writeManifest(spark: SparkSession, vdir: String,
-      segs: Seq[SegmentRef]): Unit = {
-    val sb = new StringBuilder
-    segs.foreach { s =>
-      sb.append(s"seg ${s.table} ${s.relPath} ${s.lo} ${s.hi} ${if (s.frozen) 1 else 0}\n")
-    }
-    val (fc, base) = fileContext(spark, vdir)
-    val out = fc.create(new org.apache.hadoop.fs.Path(base, "_MANIFEST"),
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    try { out.write(sb.toString.getBytes("UTF-8")); out.hsync() } finally out.close()
+  private def writeManifest(spark: SparkSession, vdir: String, manifest: Manifest): Unit = {
+    val segs = manifest.segments.map(s =>
+      s"seg ${s.table} ${s.relPath} ${s.lo} ${s.hi} ${if (s.frozen) 1 else 0}\n")
+    val m = manifest.meta
+    writeText(spark, vdir, "_MANIFEST", segs.mkString + s"meta ${m.uidLastHeight} ${m.uidNextIdx} ${m.lastBatchId}\n")
   }
 
   /** None ⇔ `vdir` has no manifest (a crashed persist that never got to
-    * phase 2). */
-  private[graft] def readManifest(spark: SparkSession, vdir: String): Option[Manifest] = {
-    val (fc, base) = fileContext(spark, vdir)
-    try {
-      val in = fc.open(new org.apache.hadoop.fs.Path(base, "_MANIFEST"))
-      val text =
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-          new String(bos.toByteArray, "UTF-8")
-        } finally in.close()
-      Some(Manifest(text.linesIterator.filter(_.nonEmpty).map(_.split(' ') match {
-        case Array("seg", t, p, lo, hi, fz) => SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1")
+    * phase 2). A manifest with an unknown line, or without exactly one
+    * `meta` line, fails. */
+  private[graft] def readManifest(spark: SparkSession, vdir: String): Option[Manifest] =
+    readText(spark, vdir, "_MANIFEST").map { text =>
+      val entries = text.linesIterator.filter(_.nonEmpty).map(_.split(' ') match {
+        case Array("seg", t, p, lo, hi, fz) => Left(SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1"))
+        case Array("meta", h, i, b) => Right(SyncMeta(h.toInt, i.toLong, b.toLong))
         case other => throw new IllegalStateException(
           s"corrupt manifest line in $vdir: ${other.mkString(" ")}")
-      }).toSeq))
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
+      }).toSeq
+      val metas = entries.collect { case Right(m) => m }
+      if (metas.size != 1) throw new IllegalStateException(
+        s"manifest in $vdir has ${metas.size} meta lines, expected exactly one")
+      Manifest(entries.collect { case Left(seg) => seg }, metas.head)
+    }
 
   private def fileContext(spark: SparkSession, dir: String): (org.apache.hadoop.fs.FileContext, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, conf)
-    (fc, p)
+    (org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, spark.sessionState.newHadoopConf()), p)
   }
 
-  /** The published version (None = nothing published). */
-  private def currentVersion(spark: SparkSession, dir: String): Option[Long] = {
+  /** The UTF-8 text of `dir/name` (None = no such file). */
+  private def readText(spark: SparkSession, dir: String, name: String): Option[String] = {
     val (fc, base) = fileContext(spark, dir)
-    val ptr = new org.apache.hadoop.fs.Path(base, "_CURRENT")
     try {
-      val in = fc.open(ptr)
+      val in = fc.open(new org.apache.hadoop.fs.Path(base, name))
       try {
         val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 1024, false)
-        Some(new String(bos.toByteArray, "UTF-8").trim.toLong)
+        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
+        Some(new String(bos.toByteArray, "UTF-8"))
       } finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** Write `text` to `dir/name`, overwriting, and hsync it. */
+  private def writeText(spark: SparkSession, dir: String, name: String, text: String): Unit = {
+    import org.apache.hadoop.fs.CreateFlag
+    val (fc, base) = fileContext(spark, dir)
+    val out = fc.create(new org.apache.hadoop.fs.Path(base, name),
+      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+    try { out.write(text.getBytes("UTF-8")); out.hsync() } finally out.close()
+  }
+
+  /** The published version (None = nothing published). */
+  private def currentVersion(spark: SparkSession, dir: String): Option[Long] =
+    readText(spark, dir, "_CURRENT").map(_.trim.toLong)
 
   /** Phase 2: atomically point `_CURRENT` at `version` (write-tmp + rename
     * with OVERWRITE — rename(2) locally, atomic HDFS rename on a cluster). */
   private def publishVersion(spark: SparkSession, dir: String, version: Long): Unit = {
     import org.apache.hadoop.fs.{Options, Path}
+    writeText(spark, dir, "_CURRENT.tmp", version.toString)
     val (fc, base) = fileContext(spark, dir)
-    val tmp = new Path(base, s"_CURRENT.tmp")
-    val ptr = new Path(base, "_CURRENT")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    try { out.write(version.toString.getBytes("UTF-8")); out.hsync() } finally out.close()
-    fc.rename(tmp, ptr, Options.Rename.OVERWRITE)
+    fc.rename(new Path(base, "_CURRENT.tmp"), new Path(base, "_CURRENT"), Options.Rename.OVERWRITE)
   }
 
   /** Best-effort sweep after the swap (a crash here only leaves orphans for
@@ -738,73 +750,54 @@ object ChainSync {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Resume a fold state persisted by [[persist]]. Each of the
-    * [[ChainTables]] reads the `chain` segments the manifest lists (each an
-    * explicit path — no directory listing of the whole history) with
-    * [[ChainSchema]], keeps its own rows by the `table` tag (a filter the
-    * Parquet scan pushes down) and projects its [[ReferenceSchemas]]
-    * columns; a table without rows loads as an empty frame of its schema.
-    * Candles and waves_data read their own segments the same way, the
-    * dimensions their version-directory files. The `sync_meta`
-    * uid-generator cursor comes back too, so txs appended at the resumed
-    * tip height continue the per-height index rather than re-issuing uids
-    * that collide with persisted rows (ADVICE r3). Fails when nothing is
-    * published under `dir`, or the published version is missing its
-    * manifest or `sync_meta`. */
+  /** Resume a fold state persisted by [[persist]]. Each of the 25
+    * height-keyed tables reads the [[Chain]] segments the manifest lists
+    * (each an explicit path — no directory listing of the whole history)
+    * and the three dimensions read the version's [[Dimensions]] file
+    * ([[Family.read]]). Candles and waves_data read their own segments. The
+    * manifest's `meta` line gives back the uid-generator cursor, so txs
+    * appended at the resumed tip height continue the per-height index
+    * rather than re-issuing uids that collide with persisted rows (ADVICE
+    * r3). Fails when nothing is published under `dir`, or the published
+    * version's manifest is missing or has no `meta` line. */
   def load(spark: SparkSession, dir: String): ChainState = {
-    val version = currentVersion(spark, dir).getOrElse(
+    val (vdir, manifest) = published(spark, dir).getOrElse(
       throw new IllegalStateException(s"no published fold state under $dir"))
-    val vdir = s"$dir/v$version"
-    val manifest = readManifest(spark, vdir).getOrElse(
-      throw new IllegalStateException(s"published version $vdir has no _MANIFEST"))
-    val (lastHeight, nextIdx, _) = readMeta(spark, dir)
-    def segments(family: String, schema: StructType): Option[DataFrame] = {
-      val paths = manifest.segments.filter(_.table == family).map(s => s"$dir/${s.relPath}")
-      if (paths.isEmpty) None else Some(spark.read.schema(schema).parquet(paths: _*))
-    }
-    def project(df: DataFrame, schema: StructType): DataFrame =
-      df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    def chainTable(name: String): DataFrame = {
-      val schema = ReferenceSchemas.tables(name)
-      segments(ChainFamily, ChainSchema)
-        .fold(emptyFrame(spark, schema))(df => project(df.filter(col("table") === name), schema))
-    }
+    def paths(family: String): Seq[String] =
+      manifest.segments.filter(_.table == family).map(s => s"$dir/${s.relPath}")
     def segmented(name: String, schema: StructType): DataFrame =
-      segments(name, schema).fold(emptyFrame(spark, schema))(project(_, schema))
-    def dimension(name: String, schema: StructType): DataFrame =
-      spark.read.schema(schema).parquet(s"$vdir/$name")
+      if (paths(name).isEmpty) emptyFrame(spark, schema) else spark.read.schema(schema).parquet(paths(name): _*)
+    def chainTable(name: String): DataFrame = Chain.read(spark, paths(Chain.name), name)
+    def dimension(name: String): DataFrame = Dimensions.read(spark, Seq(s"$vdir/${Dimensions.name}"), name)
     val blocks = chainTable("blocks_microblocks")
-    val maxUid = blocks.agg(max("uid")).first() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
     ChainState(
       blocks = blocks,
-      facts = ChainTables.tail.map(t => t -> chainTable(t)).toMap,
-      assetUpdates = dimension("asset_updates", ReferenceSchemas.assetUpdates),
-      assetTickers = dimension("asset_tickers", ReferenceSchemas.assetTickers),
-      assetOrigins = dimension("asset_origins", ReferenceSchemas.assetOrigins),
+      facts = Chain.tables.tail.map(t => t -> chainTable(t)).toMap,
+      assetUpdates = dimension("asset_updates"),
+      assetTickers = dimension("asset_tickers"),
+      assetOrigins = dimension("asset_origins"),
       wavesData = segmented("waves_data", ReferenceSchemas.wavesData),
       candles = segmented("candles", ReferenceSchemas.candles),
-      maxBlockUid = maxUid,
-      uidLastHeight = lastHeight,
-      uidNextIdx = nextIdx)
+      maxBlockUid = blocks.agg(coalesce(max("uid"), lit(0L))).first().getLong(0),
+      uidLastHeight = manifest.meta.uidLastHeight,
+      uidNextIdx = manifest.meta.uidNextIdx)
   }
 
-  /** The last streaming batch id recorded by [[persist]] (-1 if none):
+  /** The last streaming batch id recorded by [[persist]] (-1 if nothing is
+    * published), read from the published manifest without a Spark job:
     * seed [[graft.streaming.MicroBatchPipeline.startChainSync]] with it so
-    * the checkpoint-replayed batch after a driver restart is skipped. */
+    * the checkpoint-replayed batch after a restart is skipped. Fails
+    * like [[load]] on a published version without its cursor. */
   def lastAppliedBatch(spark: SparkSession, dir: String): Long =
-    readMeta(spark, dir)._3
+    published(spark, dir).fold(-1L)(_._2.meta.lastBatchId)
 
-  /** `(uid_last_height, uid_next_idx, last_batch_id)` of the published
-    * version, `(-1, 0, -1)` when nothing is published. A published version
-    * without a readable `sync_meta` fails: resuming with a reset uid cursor
-    * would re-issue tx uids at the tip height. */
-  private def readMeta(spark: SparkSession, dir: String): (Int, Long, Long) =
-    currentVersion(spark, dir).fold((-1, 0L, -1L)) { v =>
-      val r = spark.read.parquet(s"$dir/v$v/sync_meta").head()
-      (r.getInt(0), r.getLong(1), r.getLong(2))
+  /** The published version's directory and manifest (None = nothing
+    * published); a published version without its manifest fails. */
+  private def published(spark: SparkSession, dir: String): Option[(String, Manifest)] =
+    currentVersion(spark, dir).map { v =>
+      val vdir = s"$dir/v$v"
+      vdir -> readManifest(spark, vdir).getOrElse(
+        throw new IllegalStateException(s"published version $vdir has no _MANIFEST"))
     }
 
   /** The reference's three SQL views over the fold state

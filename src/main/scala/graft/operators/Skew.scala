@@ -23,9 +23,6 @@ object Skew {
     TwoPhase(name, sum(c).as(name), n => sum(col(n)).as(n))
   def countRows(name: String): TwoPhase =
     TwoPhase(name, count(lit(1)).as(name), n => sum(col(n)).as(n))
-  /** count(c) — non-NULL count, the two-phase form of `count(col)`. */
-  def countOf(c: Column, name: String): TwoPhase =
-    TwoPhase(name, count(c).as(name), n => sum(col(n)).as(n))
   def minOf(c: Column, name: String): TwoPhase =
     TwoPhase(name, min(c).as(name), n => min(col(n)).as(n))
   def maxOf(c: Column, name: String): TwoPhase =

@@ -9,14 +9,17 @@ import org.apache.spark.sql.types.StructType
   * the place of btree range scans, within-file ordering takes the place of
   * clustered indexes (parquet min/max + dictionary pushdown).
   *
-  * Conventions:
-  *   - fact tables partition by a height bucket (`height div 1000` — ~1000
-  *     blocks of facts per directory; a height- or uid-range predicate
-  *     prunes to the few buckets covering it, since uid = height*100000+idx
-  *     is height-monotonic) and sort within partitions by uid;
-  *   - candles partition by `interval` (every reference read hits exactly
-  *     one: `pg.rs:760`) and sort by (pair, time_start);
-  *   - dimensions stay unpartitioned (small) but sorted by entity key.
+  * The fold's durable state ([[graft.operators.ChainSync.persist]]) uses
+  * two of these writers: [[writeBucketSegment]] for its height- and
+  * week-bucketed segments, and [[writeParquet]] for every file. The
+  * directory-partitioned layouts below serve the query gates:
+  *   - [[writeFact]] partitions a fact table by a height bucket
+  *     (`height div 1000`; a height- or uid-range predicate prunes to the
+  *     few buckets covering it, since uid = height*100000+idx is
+  *     height-monotonic) and sorts within partitions by uid;
+  *   - [[writeCandles]] partitions candles by `interval` (every reference
+  *     read hits exactly one: `pg.rs:760`) and sorts by (pair, time_start);
+  *   - the Z-order / Hilbert writers cluster on two dimensions.
   */
 object TableStore {
 
@@ -64,8 +67,8 @@ object TableStore {
       .sortWithinPartitions(sortCols: _*), path)
   }
 
-  /** The one Parquet writer of the fold's durable state (segments,
-    * dimensions, `sync_meta`, fingerprints): overwrite, zstd. */
+  /** The one Parquet writer of the fold's durable state (segments, the
+    * dimensions family, fingerprints): overwrite, zstd. */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
 

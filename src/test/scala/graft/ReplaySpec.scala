@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -62,6 +64,18 @@ class ReplaySpec extends SparkSpec {
     // (faithful to the reference, which never deletes waves_data)
     assert(full.wavesData.count() == 2 && clean.wavesData.count() == 1)
     assert(full.maxBlockUid == 1L)
+  }
+
+  test("handleUpdates: a rollback keeps every state table in its reference column order") {
+    val rolled = fold(fold(ChainSync.emptyState(spark), block1, block2), RawRollback("b1"))
+    val tables = rolled.facts ++ Map("blocks_microblocks" -> rolled.blocks,
+      "asset_updates" -> rolled.assetUpdates, "asset_tickers" -> rolled.assetTickers,
+      "asset_origins" -> rolled.assetOrigins, "waves_data" -> rolled.wavesData,
+      "candles" -> rolled.candles)
+    tables.foreach { case (t, df) =>
+      assert(df.columns.toSeq == graft.schema.ReferenceSchemas.tables(t).fieldNames.toSeq,
+        s"$t after rollback: ${df.columns.mkString(", ")}")
+    }
   }
 
   test("handleUpdates: insert-ignore tables keep first-writer rows") {
@@ -135,8 +149,8 @@ class ReplaySpec extends SparkSpec {
       ChainSync.persist(state2, dir, lastBatchId = 2L,
         onTableWritten = name => if (name == "candles") throw new SimulatedCrash)
     }
-    // the pointer still names version 1: EVERY table (and sync_meta) reads
-    // back as the previous consistent fold
+    // the pointer still names version 1: EVERY table (and the manifest's
+    // cursor) reads back as the previous consistent fold
     val loaded = ChainSync.load(spark, dir)
     same(loaded.candles, state1.candles, "candles after crashed persist")
     same(loaded.blocks, state1.blocks, "blocks after crashed persist")
@@ -161,13 +175,30 @@ class ReplaySpec extends SparkSpec {
 
   // ---- incremental durable persist (VERDICT r5 #1) -----------------------
 
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.GraftListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   private def segFiles(dir: String): Set[String] = {
     val base = java.nio.file.Paths.get(dir, "segments")
     if (!java.nio.file.Files.exists(base)) Set.empty
     else {
       val s = java.nio.file.Files.walk(base)
       try {
-        import scala.jdk.CollectionConverters._
         s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
           .map(p => java.nio.file.Paths.get(dir).relativize(p).toString)
           .filterNot(_.endsWith("_SUCCESS")).filterNot(_.contains(".crc"))
@@ -299,25 +330,57 @@ class ReplaySpec extends SparkSpec {
     same(ChainSync.load(spark, dir).blocks, s2.blocks, "second-persist blocks")
   }
 
-  test("load fails when the published version's sync_meta is missing") {
+  test("a manifest without its meta line fails load and lastAppliedBatch") {
     // a reset uid cursor would re-issue tx uids at the tip height: a
-    // published version without its sync_meta must not load as fresh
+    // published version without its cursor must not load as fresh
     val dir = java.nio.file.Files.createTempDirectory("graft-meta-").toString
     ChainSync.persist(fold(ChainSync.emptyState(spark), block1), dir, lastBatchId = 1L)
-    val meta = java.nio.file.Paths.get(s"$dir/v1/sync_meta")
-    val files = java.nio.file.Files.walk(meta)
-    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally files.close()
-    intercept[org.apache.spark.sql.AnalysisException](ChainSync.load(spark, dir))
-    intercept[org.apache.spark.sql.AnalysisException](ChainSync.lastAppliedBatch(spark, dir))
+    val manifest = java.nio.file.Paths.get(s"$dir/v1/_MANIFEST")
+    val lines = java.nio.file.Files.readAllLines(manifest).asScala.toSeq
+    assert(lines.count(_.startsWith("meta ")) == 1, lines.mkString("\n"))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/v1/._MANIFEST.crc"))
+    java.nio.file.Files.write(manifest, lines.filterNot(_.startsWith("meta ")).asJava)
+    intercept[IllegalStateException](ChainSync.load(spark, dir))
+    intercept[IllegalStateException](ChainSync.lastAppliedBatch(spark, dir))
   }
 
-  test("readManifest rejects an unknown line") {
+  test("readManifest rejects an unknown line and a second meta line") {
     val dir = java.nio.file.Files.createTempDirectory("graft-manifest-").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_MANIFEST"),
-      "fp 0 1 2\n".getBytes("UTF-8"))
-    intercept[IllegalStateException](ChainSync.readManifest(spark, dir))
+    def rejects(text: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_MANIFEST"), text.getBytes("UTF-8"))
+      intercept[IllegalStateException](ChainSync.readManifest(spark, dir))
+    }
+    rejects("meta 1 2 3\nfp 0 1 2\n")
+    rejects("meta 1 2 3\nmeta 1 2 4\n")
+  }
+
+  test("lastAppliedBatch reads the manifest without a Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-meta-jobs-").toString
+    ChainSync.persist(fold(ChainSync.emptyState(spark), block1), dir, lastBatchId = 4L)
+    var batch = 0L
+    assert(jobsDuring { batch = ChainSync.lastAppliedBatch(spark, dir) } == 0)
+    assert(batch == 4L)
+  }
+
+  test("a published version is its manifest, the fingerprints and the dimensions family") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout-").toString
+    val state = fold(ChainSync.emptyState(spark), block1, block2)
+    ChainSync.persist(state, dir, lastBatchId = 3L)
+    assert(new java.io.File(s"$dir/v1").list().toSet ==
+      Set("_MANIFEST", "._MANIFEST.crc", "fingerprints", "dimensions"))
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$dir/v1/_MANIFEST")).asScala
+    assert(lines.filter(_.startsWith("meta ")) == Seq("meta 101 2 3"), lines.mkString("\n"))
+    // the dimensions family holds one data file, and the three dimensions
+    // load from it
+    val dimFiles = new java.io.File(s"$dir/v1/dimensions").list().filter(_.endsWith(".parquet"))
+    assert(dimFiles.length == 1, dimFiles.mkString(", "))
+    val loaded = ChainSync.load(spark, dir)
+    Seq(loaded.assetUpdates, loaded.assetTickers, loaded.assetOrigins).foreach { df =>
+      assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.contains("/v1/dimensions/")),
+        df.inputFiles.mkString(", "))
+    }
+    sameState(loaded, state, "layout:")
+    assert(loaded.uidLastHeight == 101 && loaded.uidNextIdx == 2L)
   }
 
   test("incremental persist: frozen spans are capped — a shallow rollback rewrites O(span), not O(history)") {
@@ -372,13 +435,8 @@ class ReplaySpec extends SparkSpec {
     // no per-table segment directory (these blocks carry no waves amount)
     val families = new java.io.File(s"$dir/segments").listFiles().map(_.getName).toSet
     assert(families == Set("chain", "candles"), s"$families")
-    // the rollback's USING semi join moves tx_uid to the front of the child
-    // tables in memory; load returns the reference order, so compare by name
-    val inOrder = rolled.copy(facts = rolled.facts.map { case (t, df) =>
-      t -> df.select(graft.schema.ReferenceSchemas.tables(t).fieldNames.map(col).toIndexedSeq: _*)
-    })
-    sameState(ChainSync.load(spark, dir), inOrder, "rollback below a frozen window:")
-    sameState(inOrder, fold(ChainSync.emptyState(spark), blocks.take(4): _*), "rollback vs clean replay:")
+    sameState(ChainSync.load(spark, dir), rolled, "rollback below a frozen window:")
+    sameState(rolled, fold(ChainSync.emptyState(spark), blocks.take(4): _*), "rollback vs clean replay:")
   }
 
   test("chain family: tables without rows load as empty frames of their reference schema") {
@@ -388,7 +446,7 @@ class ReplaySpec extends SparkSpec {
     val state = fold(ChainSync.emptyState(spark), block1)
     ChainSync.persist(state, dir)
     val loaded = ChainSync.load(spark, dir)
-    ChainSync.ChainTables.foreach { t =>
+    ChainSync.Chain.tables.foreach { t =>
       val df = if (t == "blocks_microblocks") loaded.blocks else loaded.facts(t)
       val expected = graft.schema.ReferenceSchemas.tables(t)
       assert(df.schema.map(f => f.name -> f.dataType) == expected.map(f => f.name -> f.dataType),
@@ -400,7 +458,6 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("every file of a published version is zstd Parquet") {
-    import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -412,9 +469,9 @@ class ReplaySpec extends SparkSpec {
       val w = java.nio.file.Files.walk(r)
       try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toVector finally w.close()
     }.filterNot(p => p.getFileName.toString.startsWith(".") || p.getFileName.toString.startsWith("_"))
-    // sync_meta, fingerprints, 3 dimensions, the chain, candles and
+    // fingerprints, the dimensions family, the chain, candles and
     // waves_data tip segments
-    assert(data.size >= 8, s"$data")
+    assert(data.size >= 5, s"$data")
     val conf = spark.sessionState.newHadoopConf()
     data.foreach { p =>
       assert(p.getFileName.toString.endsWith(".zstd.parquet"), s"$p")
@@ -579,29 +636,14 @@ class ReplaySpec extends SparkSpec {
 
   test("parallel persist: a one-bucket state costs one job per write plus fixed probes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-par-jobs-").toString
-    val sc = spark.sparkContext
-    def persistJobs(state: ChainState, batch: Long): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.GraftListenerBus.drain(sc)
-      sc.addSparkListener(listener)
-      try {
-        ChainSync.persist(state, dir, lastBatchId = batch)
-        org.apache.spark.GraftListenerBus.drain(sc)
-      } finally sc.removeSparkListener(listener)
-      jobs.get
-    }
+    def persistJobs(state: ChainState, batch: Long): Int =
+      jobsDuring(ChainSync.persist(state, dir, lastBatchId = batch))
     // heights 100-101 and one minute of trades: one height bucket, one week
     val s1 = fold(ChainSync.emptyState(spark), block1)
     val s2 = fold(s1, block2)
-    // one job per write: sync_meta, the chain family (blocks + the 24 tx
-    // tables in one file), candles, the three dimensions, waves_data and
-    // the fingerprints
-    val writes = 8
+    // one job per write: the chain family (blocks + the 24 tx tables in one
+    // file), candles, the dimensions family, waves_data and the fingerprints
+    val writes = 5
     // the fixed part: the three bucket frames (blocks, candles, waves_data),
     // their max-bucket and freeze-range probes and the shuffle stages of the
     // grouping and sorting plans; a write job per table (the per-table
@@ -626,7 +668,7 @@ class ReplaySpec extends SparkSpec {
     val rnd = new scala.util.Random(20260813L)
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-chaos-").toString
     final class SimulatedCrash extends RuntimeException("chaos crash")
-    val crashTables = Vector("chain", "candles", "sync_meta")
+    val crashTables = Vector("chain", "candles", "dimensions")
 
     var state = ChainSync.emptyState(spark)
     var applied = Vector.empty[RawBlock] // surviving chain in order
@@ -790,7 +832,7 @@ class ReplaySpec extends SparkSpec {
     val rnd = new scala.util.Random(0xC6A05L)
     val dir = java.nio.file.Files.createTempDirectory("graft-restart-chaos-").toString
     final class SimulatedCrash extends RuntimeException("restart chaos crash")
-    val crashTables = Vector("chain", "candles", "sync_meta")
+    val crashTables = Vector("chain", "candles", "dimensions")
     def publishedYet: Boolean = new java.io.File(s"$dir/_CURRENT").exists()
 
     var schedule = Vector.empty[Seq[RawUpdate]]

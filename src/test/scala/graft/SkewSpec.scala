@@ -69,27 +69,6 @@ class SkewSpec extends SparkSpec {
     assert(partials.count() > 8) // hot key split over many buckets
   }
 
-  test("salted minute candles equal the unsalted plan on the trades fixture") {
-    val trades = graft.sources.Tables.trades(spark, "/root/testdata/sf0.001")
-    val plain = graft.operators.Candles.minuteCandles(trades)
-    val salted = graft.operators.Candles.minuteCandlesSalted(trades, saltBuckets = 8)
-    assert(plain.exceptAll(salted).count() == 0 && salted.exceptAll(plain).count() == 0,
-      s"salted candle divergence:\n${plain.exceptAll(salted).collect().take(3).mkString("\n")}")
-  }
-
-  test("minuteCandlesAuto salts only past the hot-pair threshold") {
-    val trades = graft.sources.Tables.trades(spark, "/root/testdata/sf0.001")
-    // low threshold → salted path; result must still match the plain plan
-    val auto = graft.operators.Candles.minuteCandlesAuto(trades, hotPairRowThreshold = 1L)
-    val plain = graft.operators.Candles.minuteCandles(trades)
-    assert(auto.exceptAll(plain).count() == 0 && plain.exceptAll(auto).count() == 0)
-    // high threshold → the single-shuffle plan (one Exchange for the agg)
-    val unsalted = graft.operators.Candles.minuteCandlesAuto(trades, hotPairRowThreshold = Long.MaxValue)
-    val exchanges = unsalted.queryExecution.executedPlan.toString
-      .linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 2, "plain path should not pay the two-phase shuffle")
-  }
-
   test("sliced backward as-of equals the unsliced operator on a planted 100:1 hot key") {
     import graft.operators.AsofJoin
     // one hot key carrying 100× the tail's history, spanning many cells;
