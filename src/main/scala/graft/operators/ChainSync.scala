@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge.{concurrently, cut}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -314,49 +314,6 @@ object ChainSync {
       maxBlockUid = cut)
   }
 
-  /** Per-bucket (count, Σ hash) fingerprint frame — `(b INT, n BIGINT,
-    * h DECIMAL(38,0))`. NEVER collected whole (VERDICT r13 #3 retired the
-    * r12 driver-side compare and its 2^21-row tourniquet): the frame is
-    * localCheckpoint'd once and every consumer — tip lookup, the
-    * [[dirtyBoundary]] diff, the freeze-range probe in planSegments — is a
-    * distributed job collecting O(1) or O(write-work) rows. The frame
-    * itself persists to `v<N>/fingerprints` parquet for the NEXT persist
-    * to diff against. */
-  private def fingerprintDf(df: DataFrame,
-      bucketCol: org.apache.spark.sql.Column,
-      hashCols: Seq[org.apache.spark.sql.Column]): DataFrame =
-    df.groupBy(bucketCol.as("b"))
-      .agg(count(lit(1)).as("n"),
-        sum(xxhash64(hashCols: _*).cast("decimal(38,0)")).as("h"))
-      .localCheckpoint()
-
-  /** First bucket whose (count, Σ hash) differs between the current and
-    * previous fingerprint frames — a distributed full-outer join whose
-    * driver collect is exactly ONE row (the min differing bucket), however
-    * deep the history. Long.MaxValue ⇔ no difference. */
-  private[graft] def dirtyBoundary(cur: DataFrame, prev: DataFrame): Long = {
-    val c = cur.select(col("b"), col("n").as("cn"), col("h").as("ch"))
-    val p = prev.select(col("b"), col("n").as("pn"), col("h").as("ph"))
-    val r = c.join(p, Seq("b"), "full_outer")
-      .filter(!(col("cn") <=> col("pn")) || !(col("ch") <=> col("ph")))
-      .agg(min(col("b"))).head()
-    if (r.isNullAt(0)) Long.MaxValue else r.getInt(0).toLong
-  }
-
-  /** Max bucket id of a fingerprint/bucket frame (-1 ⇔ empty) — one-row
-    * collect. */
-  private def maxBucket(bucketsDf: DataFrame): Int = {
-    val r = bucketsDf.agg(max(col("b"))).head()
-    if (r.isNullAt(0)) -1 else r.getInt(0)
-  }
-
-  /** The previous version's fingerprints for `kind` ("blocks"/"candles"),
-    * read back from its `fingerprints` parquet. */
-  private def prevFingerprintDf(spark: SparkSession, dir: String,
-      prevVersion: Long, kind: String): DataFrame =
-    spark.read.parquet(s"$dir/v$prevVersion/fingerprints")
-      .filter(col("kind") === kind).select("b", "n", "h")
-
   /** Durable between-batches form of the fold state — INCREMENTAL
     * (VERDICT r5 #1): the height-keyed history is persisted as immutable
     * height-bucket SEGMENTS under `dir/segments/` that later versions
@@ -373,42 +330,45 @@ object ChainSync {
     * segment instead of one per table saves 24 write jobs, 24 footers and
     * 24 sets of dictionaries per commit. Candles segment the same way keyed
     * by `time_start` WEEK — the fold only mutates them from a recent cut-off
-    * (recomputeSince / rollback), so past weeks freeze; per-week
-    * fingerprints detect a deep rollback's recompute and invalidate from the
-    * first changed week. `waves_data` is append-only and segments by height
-    * without fingerprints; it keeps its own family because its `quantity`
+    * (recomputeSince / rollback), so past weeks freeze. `waves_data`
+    * segments by height; it keeps its own family because its `quantity`
     * is DECIMAL(38,0) where `txs_3`/`txs_5` have BIGINT. The three
     * dimension tables (SCD-2 dims, origins — small, MERGE semantics) are
     * rewritten per version as one tagged family file, `v<N>/dimensions`
     * ([[Dimensions]]), sorted by (`table`, `asset_id`, `uid`). Every file is
     * zstd-compressed Parquet ([[graft.sinks.TableStore.writeParquet]]).
     *
-    * Which buckets are reusable is decided by ONE tiny job over the blocks
-    * table: per-bucket (count, Σ xxhash64(uid,id,height,ts)) fingerprints,
-    * persisted as each version's `fingerprints` parquet and diffed against
-    * the previous version's by a DISTRIBUTED join whose driver collect is
-    * one row (VERDICT r13 #3 — no O(history) driver compare anywhere in
-    * the persist path). Facts below the tip mutate ONLY
-    * via rollback (squash touches tip-height rows; appends only grow the
-    * tip), and a rollback always deletes the affected buckets' block rows
-    * too — their fingerprints change, and the first differing bucket is the
-    * rewrite boundary. (A re-appended block with identical (uid,id,height,
-    * ts) but different transactions would evade this, which cannot happen
-    * upstream: the block id commits to the content.) The tip bucket itself
-    * is rewritten every persist — bounded by the bucket size, and squash
-    * may legitimately mutate it.
+    * Which frozen segments are reusable is decided by per-bucket
+    * [[Fingerprint]]s of the three segmented families — the blocks stand
+    * for `chain`, every column for `candles` and `waves_data`. ONE collected
+    * query computes them all (a row per bucket and family, not per row);
+    * they go into the version's `_MANIFEST` as `fp` lines, and the next
+    * persist compares against those on the driver: the first bucket whose
+    * (count, hash) differs — a bucket on one side only differs — or the
+    * tip bucket, whichever is lower, is the family's rewrite boundary, and
+    * frozen segments wholly below it are reused by reference. Facts below
+    * the tip mutate ONLY via rollback (squash touches tip-height rows;
+    * appends only grow the tip), and a rollback always deletes the
+    * affected buckets' block rows too, so their fingerprints change. (A
+    * re-appended block with identical (uid,id,height,ts) but different
+    * transactions would evade this, which cannot happen upstream: the
+    * block id commits to the content.) Candle weeks below the recompute
+    * cut-off keep their fingerprints; `waves_data` rows are never deleted,
+    * and a row re-appended below its tip after a rollback changes that
+    * bucket's fingerprint. The tip bucket itself is rewritten every persist
+    * — bounded by the bucket size, and squash may legitimately mutate it.
     *
     * ATOMIC across tables (≙ the reference's one transaction around
     * blocks+txs+candles and the consumer state, `mod.rs:168-186` /
     * `pg.rs:51-63`): segments and version files are written first, then the
-    * version's `_MANIFEST` (its segments and the consumer cursor,
-    * [[SyncMeta]]), and only then is the version PUBLISHED by an atomic
-    * rename of the `_CURRENT` pointer file. A crash anywhere mid-write leaves
-    * the pointer on the previous version — orphaned segments/dirs are swept
-    * by the next
-    * successful persist. Rename atomicity: POSIX rename(2) locally / HDFS
-    * rename via `FileContext(Options.Rename.OVERWRITE)` — an object store
-    * would need a conditional put or a commit service instead.
+    * version's `_MANIFEST` (its segments, fingerprints and the consumer
+    * cursor, [[SyncMeta]]), and only then is the version PUBLISHED by an
+    * atomic rename of the `_CURRENT` pointer file. A crash anywhere
+    * mid-write leaves the pointer on the previous version — orphaned
+    * segments/dirs are swept by the next successful persist. Rename
+    * atomicity: POSIX rename(2) locally / HDFS rename via
+    * `FileContext(Options.Rename.OVERWRITE)` — an object store would need a
+    * conditional put or a commit service instead.
     *
     * The previous version is KEPT through one more persist (ADVICE r5):
     * lazy DataFrames returned by an earlier [[load]] — or a concurrent
@@ -417,8 +377,8 @@ object ChainSync {
     * Single-writer is still assumed (two concurrent persists would race on
     * the same v<N>).
     *
-    * The writes (the chain family, candles + fingerprints, the dimensions,
-    * waves_data) are independent, so they run as one
+    * The writes (the chain family, candles, the dimensions, waves_data) are
+    * independent, so they run as one
     * [[org.apache.spark.sql.GraftColumnBridge.concurrently]] fan-out of
     * Spark jobs; the manifest keeps their input order. Atomicity is
     * unchanged: `concurrently` joins every write before it returns or
@@ -436,21 +396,19 @@ object ChainSync {
     val prevVersion = currentVersion(spark, dir)
     val version = prevVersion.getOrElse(0L) + 1L
     val vdir = s"$dir/v$version"
-    val heightBucketCol = (col("height") / TableStore.HeightBucketSize).cast("int")
-    // one small job over the (in-memory, localCheckpoint'd) blocks table:
-    // per-bucket fingerprints decide which frozen segments stay valid —
-    // held DISTRIBUTED (never collected whole, VERDICT r13 #3)
-    val fpDf = fingerprintDf(state.blocks, heightBucketCol,
-      Seq(col("uid"), col("id"), col("height"),
-        coalesce(unix_millis(col("time_stamp")), lit(-1L))))
-    val tipBucket = maxBucket(fpDf)
     val prevManifest = prevVersion.flatMap(v => readManifest(spark, s"$dir/v$v"))
-    def prevSegments(family: String, keep: SegmentRef => Boolean): Seq[SegmentRef] =
-      prevManifest.map(_.segments.filter(s => s.table == family && s.frozen && keep(s))).getOrElse(Nil)
+    val heightBucketCol = (col("height") / TableStore.HeightBucketSize).cast("int")
+    val candleBucketCol = floor(unix_millis(col("time_start")) / lit(CandleBucketMs)).cast("int")
+    val fps = fingerprints(Seq(
+      (Chain.name, state.blocks, heightBucketCol, Seq(col("uid"), col("id"), col("height"),
+        coalesce(unix_millis(col("time_stamp")), lit(-1L)))),
+      ("candles", state.candles, candleBucketCol, ReferenceSchemas.candles.fieldNames.map(col).toSeq),
+      ("waves_data", state.wavesData, heightBucketCol, ReferenceSchemas.wavesData.fieldNames.map(col).toSeq)))
 
-    // Shared segment planner for ANY suffix-mutating keyspace (the chain
-    // family by height bucket, candles by time_start week): reuse kept
-    // frozen segments, freeze newly-passed buckets, rewrite the tip.
+    // Shared segment planner for every suffix-mutating keyspace (the chain
+    // family and waves_data by height bucket, candles by time_start week):
+    // reuse the previous version's frozen segments below the rewrite
+    // boundary, freeze newly-passed buckets, rewrite the tip.
     // Frozen writes are SPAN-CAPPED into absolute-aligned windows of
     // FrozenSegmentSpan buckets: a single wide segment (the bootstrap
     // persist would freeze [0, tip-1] in one piece) turns any later
@@ -460,27 +418,23 @@ object ChainSync {
     // plus the genuinely invalidated ones; steady-state tip advances still
     // freeze exactly one bucket per segment. Absolute alignment (window =
     // bucket/span) keeps window boundaries stable across persists.
-    def planSegments(name: String, df: DataFrame,
-        bucketsX: DataFrame, tipX: Int, kept: Seq[SegmentRef],
-        bucketCol: org.apache.spark.sql.Column,
-        sortCols: Seq[org.apache.spark.sql.Column]): Seq[SegmentRef] = {
+    def writeFamily(name: String, df: DataFrame, bucketCol: Column, sortCols: Seq[Column]): Seq[SegmentRef] = {
+      val cur = fps.filter(_.family == name)
+      val buckets = cur.map(_.bucket)
+      val tip = buckets.maxOption.getOrElse(-1)
+      val prev = prevManifest.map(_.fingerprints.filter(_.family == name)).getOrElse(Nil)
+      val boundary = math.min(firstChangedBucket(cur, prev), tip.toLong)
+      val kept = prevManifest.map(_.segments.filter(s => s.table == name && s.frozen && s.hi < boundary))
+        .getOrElse(Nil)
       val freezeLo: Long = kept.map(_.hi).maxOption.map(_ + 1L).getOrElse(Long.MinValue)
+      val freeze = buckets.filter(b => b >= freezeLo && b < tip)
       val refs = Seq.newBuilder[SegmentRef]
       refs ++= kept
-      // the buckets to freeze THIS persist — the one remaining collect, and
-      // it is O(write work), never O(history): every collected bucket id is
-      // about to be rewritten into a frozen segment below (steady state =
-      // at most one bucket; bootstrap / deep rollback = exactly the range
-      // being re-segmented, whose WRITES dwarf the id collect)
-      val freeze: Set[Int] =
-        if (tipX < 0) Set.empty
-        else bucketsX.filter(col("b") >= freezeLo && col("b") < tipX)
-          .select("b").collect().map(_.getInt(0)).toSet
       if (freeze.nonEmpty) {
         val lo = freeze.min
-        (lo / FrozenSegmentSpan to (tipX - 1) / FrozenSegmentSpan).foreach { w =>
+        (lo / FrozenSegmentSpan to (tip - 1) / FrozenSegmentSpan).foreach { w =>
           val clipLo = math.max(lo, w * FrozenSegmentSpan)
-          val clipHi = math.min(tipX - 1, (w + 1) * FrozenSegmentSpan - 1)
+          val clipHi = math.min(tip - 1, (w + 1) * FrozenSegmentSpan - 1)
           if (freeze.exists(b => b >= clipLo && b <= clipHi)) {
             val rel = s"segments/$name/s$version-f$w"
             TableStore.writeBucketSegment(df, s"$dir/$rel", bucketCol, clipLo, clipHi, sortCols)
@@ -489,54 +443,15 @@ object ChainSync {
         }
       }
       // tip segment: rewritten every persist (squash/rollback may mutate it)
-      if (tipX >= 0) {
+      if (tip >= 0) {
         val rel = s"segments/$name/s$version-t"
-        TableStore.writeBucketSegment(df, s"$dir/$rel", bucketCol, tipX, tipX, sortCols)
-        refs += SegmentRef(name, rel, tipX, tipX, frozen = false)
+        TableStore.writeBucketSegment(df, s"$dir/$rel", bucketCol, tip, tip, sortCols)
+        refs += SegmentRef(name, rel, tip, tip, frozen = false)
       }
       onTableWritten(name)
       refs.result()
     }
 
-    // the chain family: rollback is the only below-tip mutator and always
-    // deletes block rows in every bucket it touches, so frozen segments
-    // below the first bucket whose blocks differ from the previous persist
-    // (a distributed diff collecting one row) are reused by reference
-    def writeChain(): Seq[SegmentRef] = {
-      val dirtyFrom: Long = prevVersion.fold(Long.MinValue)(v =>
-        dirtyBoundary(fpDf, prevFingerprintDf(spark, dir, v, "blocks")))
-      val boundary = math.min(dirtyFrom, tipBucket.toLong)
-      planSegments(Chain.name, Chain.frame(state.facts + ("blocks_microblocks" -> state.blocks)),
-        fpDf, tipBucket, prevSegments(Chain.name, _.hi < boundary), heightBucketCol,
-        Seq("table", "height", "uid", "tx_uid").map(col))
-    }
-
-    // Candles: the same incremental machinery keyed by time_start WEEK.
-    // The fold mutates candles only from a recent cut-off (recomputeSince/
-    // rollback), so history weeks freeze exactly like passed height
-    // buckets; per-week fingerprints in the manifest detect any rewrite of
-    // an older week (a deep rollback's recompute) and invalidate from
-    // there. Without this the candle history — O(pairs × minutes), which
-    // grows without bound — would be rewritten whole every persist.
-    def writeCandles(): Seq[SegmentRef] = {
-      val cBucketCol = floor(unix_millis(col("time_start")) / lit(CandleBucketMs)).cast("int")
-      val cfpDf = fingerprintDf(state.candles, cBucketCol,
-        ReferenceSchemas.candles.fieldNames.map(col).toIndexedSeq)
-      val cTip = maxBucket(cfpDf)
-      val cDirty: Long = prevVersion.fold(Long.MinValue)(v =>
-        dirtyBoundary(cfpDf, prevFingerprintDf(spark, dir, v, "candles")))
-      val cBoundary = math.min(cDirty, cTip.toLong)
-      // the fingerprint frames persist as parquet INSIDE the version payload
-      // (written before the manifest, so a published manifest always has its
-      // parquet) — the next persist diffs against them distributedly instead
-      // of collecting O(history) fingerprints into the driver
-      TableStore.writeParquet(fpDf.withColumn("kind", lit("blocks"))
-        .unionByName(cfpDf.withColumn("kind", lit("candles"))).coalesce(1), s"$vdir/fingerprints")
-      planSegments("candles", state.candles, cfpDf, cTip,
-        prevSegments("candles", _.hi < cBoundary), cBucketCol,
-        Seq(col("time_start"), col("interval"), col("amount_asset_id"),
-          col("price_asset_id"), col("matcher_address")))
-    }
     // the dimensions: one file, sorted within its one partition (a global
     // sort would add a range-sampling job)
     def writeDimensions(): Seq[SegmentRef] = {
@@ -548,28 +463,46 @@ object ChainSync {
       onTableWritten(Dimensions.name)
       Nil
     }
-    // waves_data: append-only by CONSTRUCTION (insert-ignore keyed by
-    // height; rollback never deletes it — first-writer wins on re-append),
-    // so every previously frozen segment is reusable unconditionally and
-    // no fingerprints are needed; only the tip bucket is rewritten.
-    def writeWavesData(): Seq[SegmentRef] = {
-      val wBucketsDf = state.wavesData
-        .groupBy(heightBucketCol.as("b")).agg(count(lit(1)).as("n")).localCheckpoint()
-      planSegments("waves_data", state.wavesData, wBucketsDf, maxBucket(wBucketsDf),
-        prevSegments("waves_data", _ => true), heightBucketCol, Seq(col("height")))
-    }
     // every write is independent of the others': they run as one
     // concurrent fan-out, and their segment lists come back in this order,
     // which is the manifest's
     val segs = concurrently(spark, Seq(
-      () => writeChain(),
-      () => writeCandles(),
+      () => writeFamily(Chain.name, Chain.frame(state.facts + ("blocks_microblocks" -> state.blocks)),
+        heightBucketCol, Seq("table", "height", "uid", "tx_uid").map(col)),
+      () => writeFamily("candles", state.candles, candleBucketCol,
+        Seq("time_start", "interval", "amount_asset_id", "price_asset_id", "matcher_address").map(col)),
       () => writeDimensions(),
-      () => writeWavesData())).flatten
+      () => writeFamily("waves_data", state.wavesData, heightBucketCol, Seq(col("height"))))).flatten
     writeManifest(spark, vdir,
-      Manifest(segs, SyncMeta(state.uidLastHeight, state.uidNextIdx, lastBatchId)))
+      Manifest(segs, fps, SyncMeta(state.uidLastHeight, state.uidNextIdx, lastBatchId)))
     publishVersion(spark, dir, version)
     cleanupVersions(spark, dir, current = version)
+  }
+
+  /** Each family's per-bucket fingerprints from ONE collected query: the
+    * frames' `(family, bucket, xxhash64(hashCols))` rows, unioned, grouped by
+    * (family, bucket), summed exactly as DECIMAL(38,0). Sorted by (family,
+    * bucket). */
+  private def fingerprints(families: Seq[(String, DataFrame, Column, Seq[Column])]): Seq[Fingerprint] =
+    families.map { case (name, df, bucketCol, hashCols) =>
+      df.select(lit(name).as("family"), bucketCol.as("b"), xxhash64(hashCols: _*).as("x"))
+    }.reduce(_.union(_))
+      .groupBy("family", "b")
+      .agg(count(lit(1)), sum(col("x").cast("decimal(38,0)")))
+      .collect().toSeq
+      .map(r => Fingerprint(r.getString(0), r.getInt(1), r.getLong(2), r.getDecimal(3)))
+      .sortBy(f => (f.family, f.bucket))
+
+  /** The first bucket whose fingerprint differs between `cur` and `prev`
+    * (one family's); a bucket on one side only differs. Long.MaxValue ⇔ no
+    * difference. */
+  private def firstChangedBucket(cur: Seq[Fingerprint], prev: Seq[Fingerprint]): Long = {
+    val c = cur.map(f => f.bucket -> f).toMap
+    val p = prev.map(f => f.bucket -> f).toMap
+    (c.keySet ++ p.keySet).filterNot(b => (c.get(b), p.get(b)) match {
+      case (Some(x), Some(y)) => x.count == y.count && x.hash.compareTo(y.hash) == 0
+      case _ => false
+    }).minOption.fold(Long.MaxValue)(_.toLong)
   }
 
   /** Several tables persisted as one Parquet frame, each row tagged with
@@ -639,34 +572,50 @@ object ChainSync {
     * applied streaming batch id (a replayed batch is skipped — ADVICE r3). */
   private[graft] final case class SyncMeta(uidLastHeight: Int, uidNextIdx: Long, lastBatchId: Long)
 
+  /** One bucket's fingerprint in segment family `family`: its row count
+    * and the exact Σ xxhash64 of its rows (a DECIMAL(38,0) sum, kept as
+    * BigDecimal text in the manifest and compared with `compareTo`). */
+  private[graft] final case class Fingerprint(family: String, bucket: Int, count: Long, hash: java.math.BigDecimal)
+
   /** Per-version manifest: one `seg <family> <rel> <lo> <hi> <frozen>`
     * line per segment of the segmented families (`chain`, `candles`,
-    * `waves_data`) and exactly one
+    * `waves_data`), one `fp <family> <bucket> <count> <hash>` line per
+    * bucket of theirs ([[Fingerprint]]) and exactly one
     * `meta <uid_last_height> <uid_next_idx> <last_batch_id>` line. */
-  private[graft] final case class Manifest(segments: Seq[SegmentRef], meta: SyncMeta)
+  private[graft] final case class Manifest(segments: Seq[SegmentRef], fingerprints: Seq[Fingerprint],
+      meta: SyncMeta)
 
   private def writeManifest(spark: SparkSession, vdir: String, manifest: Manifest): Unit = {
     val segs = manifest.segments.map(s =>
       s"seg ${s.table} ${s.relPath} ${s.lo} ${s.hi} ${if (s.frozen) 1 else 0}\n")
+    val fps = manifest.fingerprints.map(f => s"fp ${f.family} ${f.bucket} ${f.count} ${f.hash.toPlainString}\n")
     val m = manifest.meta
-    writeText(spark, vdir, "_MANIFEST", segs.mkString + s"meta ${m.uidLastHeight} ${m.uidNextIdx} ${m.lastBatchId}\n")
+    writeText(spark, vdir, "_MANIFEST",
+      segs.mkString + fps.mkString + s"meta ${m.uidLastHeight} ${m.uidNextIdx} ${m.lastBatchId}\n")
   }
 
   /** None ⇔ `vdir` has no manifest (a crashed persist that never got to
-    * phase 2). A manifest with an unknown line, or without exactly one
-    * `meta` line, fails. */
+    * phase 2). A manifest with a line that is not one of the three forms —
+    * unknown, with the wrong field count, a non-numeric number or a frozen
+    * flag other than 0/1 — or without exactly one `meta` line, fails. */
   private[graft] def readManifest(spark: SparkSession, vdir: String): Option[Manifest] =
     readText(spark, vdir, "_MANIFEST").map { text =>
-      val entries = text.linesIterator.filter(_.nonEmpty).map(_.split(' ') match {
-        case Array("seg", t, p, lo, hi, fz) => Left(SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1"))
-        case Array("meta", h, i, b) => Right(SyncMeta(h.toInt, i.toLong, b.toLong))
-        case other => throw new IllegalStateException(
-          s"corrupt manifest line in $vdir: ${other.mkString(" ")}")
-      }).toSeq
-      val metas = entries.collect { case Right(m) => m }
-      if (metas.size != 1) throw new IllegalStateException(
-        s"manifest in $vdir has ${metas.size} meta lines, expected exactly one")
-      Manifest(entries.collect { case Left(seg) => seg }, metas.head)
+      val segs = Seq.newBuilder[SegmentRef]
+      val fps = Seq.newBuilder[Fingerprint]
+      val metas = Seq.newBuilder[SyncMeta]
+      def corrupt(line: String) = new IllegalStateException(s"corrupt manifest line in $vdir: $line")
+      text.linesIterator.filter(_.nonEmpty).foreach { line =>
+        try line.split(' ') match {
+          case Array("seg", t, p, lo, hi, fz @ ("0" | "1")) => segs += SegmentRef(t, p, lo.toInt, hi.toInt, fz == "1")
+          case Array("fp", f, b, n, h) => fps += Fingerprint(f, b.toInt, n.toLong, new java.math.BigDecimal(h))
+          case Array("meta", h, i, b) => metas += SyncMeta(h.toInt, i.toLong, b.toLong)
+          case _ => throw corrupt(line)
+        } catch { case _: NumberFormatException => throw corrupt(line) }
+      }
+      val meta = metas.result()
+      if (meta.size != 1) throw new IllegalStateException(
+        s"manifest in $vdir has ${meta.size} meta lines, expected exactly one")
+      Manifest(segs.result(), fps.result(), meta.head)
     }
 
   private def fileContext(spark: SparkSession, dir: String): (org.apache.hadoop.fs.FileContext, org.apache.hadoop.fs.Path) = {

@@ -81,10 +81,27 @@ object Pipeline {
       .select("uid").collect().headOption.map(_.getLong(0))
   }
 
-  /** FIFO of [[globalRowNumber]]'s cached inputs — see the pool comment in
-    * the method body. */
+  /** FIFO of the cached inputs of [[globalRowNumber]], [[groupedRowNumber]]
+    * and [[runningTotal]] — see [[rangeSorted]]. */
   private val persistedPool = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   private val PersistedPoolSize = 4
+
+  /** The shared first step of the distributed numbering/prefix-sum
+    * operators: `events` range-partitioned on `keys` into `partitions`
+    * (default `spark.sql.shuffle.partitions`), sorted within partitions,
+    * given its working `columns` and persisted. The persisted frame joins
+    * a bounded pool: at most the last few inputs stay cached, so repeated
+    * per-micro-batch calls cannot pin storage without limit (ADVICE r3). */
+  private def rangeSorted(events: DataFrame, keys: Seq[Column], partitions: Int)(
+      columns: DataFrame => DataFrame): DataFrame = {
+    val n = if (partitions > 0) partitions
+            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val sorted = columns(events.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)).persist()
+    persistedPool.add(sorted)
+    while (persistedPool.size() > PersistedPoolSize)
+      Option(persistedPool.poll()).foreach(_.unpersist(false))
+    sorted
+  }
 
   /** Distributed global row numbering: range-partition on the order key,
     * number within partitions, add cumulative partition offsets. Unlike
@@ -92,8 +109,6 @@ object Pipeline {
     * through a single partition — the only driver-side state is one count
     * per partition. Returns the frame with a 1-based `__global_rn` column. */
   def globalRowNumber(events: DataFrame, orderCol: Column, partitions: Int = 0): DataFrame = {
-    val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Range partitions come out in key order, so partition id IS the range
     // rank; within a sorted partition monotonically_increasing_id ascends in
     // row order. Global rn = cumulative prior-partition counts + local rank.
@@ -105,18 +120,12 @@ object Pipeline {
     // its SHUFFLE FILES pin the partition boundaries: a later
     // eviction/unpersist recompute re-reads the same shuffle output, so the
     // numbering stays correct — which is what makes the bounded cache pool
-    // below safe. (An eager localCheckpoint would also be leak-free but
+    // safe. (An eager localCheckpoint would also be leak-free but
     // loses the columnar cache and cross-call plan reuse — measured 4× on
     // the batch-accumulator path.)
-    val sorted = events.repartitionByRange(n, orderCol).sortWithinPartitions(orderCol)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist()
-    // bounded pool: keep at most the last few inputs cached, so repeated
-    // per-micro-batch calls cannot pin storage without limit (ADVICE r3)
-    persistedPool.add(sorted)
-    while (persistedPool.size() > PersistedPoolSize)
-      Option(persistedPool.poll()).foreach(_.unpersist(false))
+    val sorted = rangeSorted(events, Seq(orderCol), partitions)(
+      _.withColumn("__pid", spark_partition_id())
+        .withColumn("__mid", monotonically_increasing_id()))
     val stats = sorted.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__mid0"))
       .collect()
@@ -151,16 +160,9 @@ object Pipeline {
   def groupedRowNumber(events: DataFrame, groupCols: Seq[String], orderCol: Column,
       partitions: Int = 0): DataFrame = {
     require(groupCols.nonEmpty, "use globalRowNumber for the ungrouped form")
-    val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val keys = groupCols.map(col) :+ orderCol
-    val sorted = events.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist()
-    persistedPool.add(sorted)
-    while (persistedPool.size() > PersistedPoolSize)
-      Option(persistedPool.poll()).foreach(_.unpersist(false))
+    val sorted = rangeSorted(events, groupCols.map(col) :+ orderCol, partitions)(
+      _.withColumn("__pid", spark_partition_id())
+        .withColumn("__mid", monotonically_increasing_id()))
     val statsDf = sorted.groupBy("__pid", groupCols: _*)
       .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__mid0"))
     val stats = statsDf.collect()
@@ -198,16 +200,9 @@ object Pipeline {
     * `__running_total` column. */
   def runningTotal(events: DataFrame, orderCols: Seq[Column], valueCol: Column,
       partitions: Int = 0): DataFrame = {
-    val n = if (partitions > 0) partitions
-            else events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = events.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__val", valueCol.cast("long"))
-      .persist()
-    persistedPool.add(sorted)
-    while (persistedPool.size() > PersistedPoolSize)
-      Option(persistedPool.poll()).foreach(_.unpersist(false))
+    val sorted = rangeSorted(events, orderCols, partitions)(
+      _.withColumn("__pid", spark_partition_id())
+        .withColumn("__val", valueCol.cast("long")))
     val stats = sorted.groupBy(col("__pid")).agg(sum(col("__val")).as("__s"))
       .collect().sortBy(_.getInt(0))
     var acc = 0L

@@ -67,8 +67,8 @@ object TableStore {
       .sortWithinPartitions(sortCols: _*), path)
   }
 
-  /** The one Parquet writer of the fold's durable state (segments, the
-    * dimensions family, fingerprints): overwrite, zstd. */
+  /** The one Parquet writer of the fold's durable state (segments and the
+    * dimensions family): overwrite, zstd. */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
 

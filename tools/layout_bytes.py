@@ -18,8 +18,8 @@ Kinds:
   other           anything else
 
 Groups: a segment family (``chain``, ``candles``, ``waves_data``) or a
-version-directory file (``dimensions``, ``fingerprints``); the manifest and
-its checksum file form the group ``manifest``.
+version-directory file (``dimensions``); the manifest (with its ``fp``
+fingerprint lines) and its checksum file form the group ``manifest``.
 
 Standard library only.
 """
